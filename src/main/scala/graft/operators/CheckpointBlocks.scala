@@ -69,6 +69,15 @@ private[graft] object CheckpointBlocks {
     df
   }
 
+  /** A site-key component naming the dataset an operator-level
+    * checkpoint was built from (the query-level sites scope by their
+    * `|$dir` instead): two inputs through one operator must not share
+    * a site, or building the second frees the first's live blocks.
+    * Stable across re-reads of the same snapshot, so serial reruns
+    * still free their predecessor. */
+  def fingerprint(df: DataFrame): String =
+    Integer.toHexString(df.queryExecution.analyzed.semanticHash())
+
   /** Cross-thread re-registrations that skipped the eager free
     * (observability for the degraded path — a growing count means a
     * caller is racing one site and leaning on ContextCleaner). */

@@ -118,22 +118,17 @@ object AdvancedQueries {
     * can't hash-match an oracle). */
   def q_quantiles(spark: SparkSession, dir: String): DataFrame = {
     val qty = col("l_quantity").cast("double")
-    // the 3-row result materializes once before the contract orderBy:
-    // percentile is a sort-based aggregate holding full value buffers,
-    // and range sampling re-executed the final merge (measured as twin
-    // 1.36 s + 1.04 s stages at sf0.1; round-13)
-    graft.operators.CheckpointBlocks.retire(s"q_quantiles.out|$dir",
-      Tables.table(spark, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-          round(percentile(qty, lit(0.25)), 6).as("qty_p25"),
-          round(percentile(qty, lit(0.5)), 6).as("qty_p50"),
-          round(percentile(qty, lit(0.75)), 6).as("qty_p75"),
-          round(percentile(qty, lit(0.9)), 6).as("qty_p90"),
-          round(percentile(col("l_extendedprice").cast("double"), lit(0.5)), 6)
-            .as("price_p50"))
-        .localCheckpoint(true))
-      .orderBy(col("l_returnflag").asc)
+    // percentile is a sort-based aggregate holding full value buffers
+    ContractSort(Tables.table(spark, dir, "lineitem")
+      .groupBy("l_returnflag")
+      .agg(
+        round(percentile(qty, lit(0.25)), 6).as("qty_p25"),
+        round(percentile(qty, lit(0.5)), 6).as("qty_p50"),
+        round(percentile(qty, lit(0.75)), 6).as("qty_p75"),
+        round(percentile(qty, lit(0.9)), 6).as("qty_p90"),
+        round(percentile(col("l_extendedprice").cast("double"), lit(0.5)), 6)
+          .as("price_p50")),
+      col("l_returnflag").asc)
   }
 
   /** Custom whole-operator plan ([[graft.plans.TopKPerGroupPlan]]):

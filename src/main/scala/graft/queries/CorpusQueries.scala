@@ -110,14 +110,9 @@ object CorpusQueries {
       .orderBy(col("content_md5").asc)
 
   def q_dedup_ngram(spark: SparkSession, dir: String): DataFrame =
-    // surviving pairs materialize once before the contract orderBy
-    // (range sampling otherwise re-executes the final agg+filter
-    // segment; round-13, same fix as q_ssjoin)
-    graft.operators.CheckpointBlocks.retire(s"q_dedup_ngram.pairs|$dir",
-      TextOps.ngramJaccardPairs(
-        Tables.table(spark, dir, "documents"), ShingleN, JaccardThreshold)
-        .localCheckpoint(true))
-      .orderBy(col("a").asc, col("b").asc)
+    ContractSort(TextOps.ngramJaccardPairs(
+      Tables.table(spark, dir, "documents"), ShingleN, JaccardThreshold),
+      col("a").asc, col("b").asc)
 
   /** Exact set-similarity join, prefix-filtered (the lossless scale
     * path for exact Jaccard; same threshold as [[q_dedup_ngram]]'s n²
@@ -126,15 +121,9 @@ object CorpusQueries {
     // the df-ordered shingle table is the staged per-snapshot index
     // ([[DedupStage.prefixIndex]]); the measured op is the prefix
     // candidate join + positional filter + exact verify at p/q = 1/2.
-    // Verified pairs materialize ONCE before the contract orderBy —
-    // a range-partitioned sort samples then shuffles its child, so
-    // the exact-intersection verify segment executed twice per
-    // invocation (round-13; same fix as q_fuzzy_join).
-    graft.operators.CheckpointBlocks.retire(s"q_ssjoin.verified|$dir",
-        TextOps.prefixJaccardPairsFromKeyed(
-          DedupStage.prefixIndex(spark, dir), p = 1, q = 2)
-          .localCheckpoint(true))
-      .orderBy(col("a").asc, col("b").asc)
+    ContractSort(TextOps.prefixJaccardPairsFromKeyed(
+      DedupStage.prefixIndex(spark, dir), p = 1, q = 2),
+      col("a").asc, col("b").asc)
 
   def q_dedup_minhash(spark: SparkSession, dir: String): DataFrame =
     // the pair table is the staged per-snapshot artifact
@@ -239,13 +228,9 @@ object CorpusQueries {
   }
 
   def q_dedup_simhash(spark: SparkSession, dir: String): DataFrame =
-    // pairs materialize once before the contract orderBy (range
-    // sampling re-executes the pre-sort segment; round-13)
-    graft.operators.CheckpointBlocks.retire(s"q_dedup_simhash.pairs|$dir",
-      TextOps.simhashNearPairs(
-        Tables.table(spark, dir, "documents"), SimhashMaxHamming)
-        .localCheckpoint(true))
-      .orderBy(col("a").asc, col("b").asc)
+    ContractSort(TextOps.simhashNearPairs(
+      Tables.table(spark, dir, "documents"), SimhashMaxHamming),
+      col("a").asc, col("b").asc)
 
   def q_embed_nn(spark: SparkSession, dir: String): DataFrame =
     VectorOps.allNearestNeighbor(Tables.table(spark, dir, "embeddings"))
@@ -426,13 +411,8 @@ object CorpusQueries {
   /** Gopher-style repetition filters over the corpus
     * ([[TextOps.repetitionStats]]). */
   def q_repetition(spark: SparkSession, dir: String): DataFrame =
-    // per-doc stats materialize once before the contract orderBy
-    // (range sampling re-executed the gram-stats segment — measured
-    // as twin 1.25 s + 1.12 s stages at sf0.1; round-13)
-    graft.operators.CheckpointBlocks.retire(s"q_repetition.stats|$dir",
-      TextOps.repetitionStats(Tables.table(spark, dir, "documents"))
-        .localCheckpoint(true))
-      .orderBy(col("doc_id").asc)
+    ContractSort(TextOps.repetitionStats(Tables.table(spark, dir, "documents")),
+      col("doc_id").asc)
 
   private[queries] val ExactSubstrW = 5
 
@@ -445,16 +425,9 @@ object CorpusQueries {
     * 5×-narrower segment stream which stages to a 2× win. Keep the
     * inline form. */
   def q_exact_substring(spark: SparkSession, dir: String): DataFrame =
-    // the rewritten docs materialize once before the contract orderBy
-    // (range sampling re-executed the whole gram-dedup + render
-    // segment; round-13 — distinct from the REJECTED r10 cross-
-    // consumer gram staging: this is one in-plan materialization of
-    // the final 5k-row output, not a persisted token stream)
-    graft.operators.CheckpointBlocks.retire(s"q_exact_substring.out|$dir",
-      TextOps.exactSubstringDedup(
-        Tables.table(spark, dir, "documents"), ExactSubstrW)
-        .localCheckpoint(true))
-      .orderBy(col("doc_id").asc)
+    ContractSort(TextOps.exactSubstringDedup(
+      Tables.table(spark, dir, "documents"), ExactSubstrW),
+      col("doc_id").asc)
 
   /** C4-style keep-first span dedup ([[TextOps.dedupRewrite]]):
     * non-overlapping [[RewriteSeg]]-token spans, every duplicated

@@ -332,12 +332,7 @@ object ParityQueries {
       .agg(collect_list(struct(
         col("l_partkey").as("artist_id"),
         concat(lit("part_"), col("l_partkey")).as("artist_name"))).as("artists"))
-    // the normalized dimension materializes once before the contract
-    // orderBy (range sampling re-executed the collect+explode+dedup
-    // segment; round-13)
-    graft.operators.CheckpointBlocks.retire(s"q_explode_normalize.out|$dir",
-      graft.etl.Normalize.artists(docs).localCheckpoint(true))
-      .orderBy(col("artist_id").asc)
+    ContractSort(graft.etl.Normalize.artists(docs), col("artist_id").asc)
   }
 
   /** P3 + A4 exactly-k guard, oracle-gated: the reference refuses to

@@ -45,16 +45,7 @@ object PipelineQueries {
       // own row count — a computed value, not a config
       verifyPartitions = Some(FuzzyJoin.verifyPartitionsFor(
         spark, DedupStage.customerNameIndexSize(spark, dir))))
-    // materialize the verified pairs ONCE before the contract orderBy:
-    // a range-partitioned sort SAMPLES its child and then shuffles it,
-    // so the whole attach+verify segment executed twice per invocation
-    // (measured as twin 4.4 s + 3.7 s stages at sf0.1 — guide §1.2
-    // "don't compute things you throw away"). The surviving pair set
-    // is tiny; the checkpoint is part of the returned plan, so it
-    // retires per (query, snapshot) site.
-    graft.operators.CheckpointBlocks.retire(s"q_fuzzy_join.verified|$dir",
-        verified.localCheckpoint(true))
-      .orderBy(col("a_id").asc, col("b_id").asc)
+    ContractSort(verified, col("a_id").asc, col("b_id").asc)
   }
 
   private val SnWindow = 5
@@ -776,15 +767,10 @@ object PipelineQueries {
   /** Asymmetric shingle containment ([[TextOps.containmentPairs]]):
     * catches subset-duplicates whose Jaccard stays low. */
   def q_containment(spark: SparkSession, dir: String): DataFrame =
-    // pairs materialize once before the contract orderBy (range
-    // sampling otherwise re-executes the final agg+filter segment;
-    // round-13, same fix as q_ssjoin/q_dedup_ngram)
-    graft.operators.CheckpointBlocks.retire(s"q_containment.pairs|$dir",
-      TextOps.containmentPairs(
-        Tables.table(spark, dir, "documents"),
-        CorpusQueries.ShingleN, ContainmentThreshold)
-        .localCheckpoint(true))
-      .orderBy(col("a").asc, col("b").asc)
+    ContractSort(TextOps.containmentPairs(
+      Tables.table(spark, dir, "documents"),
+      CorpusQueries.ShingleN, ContainmentThreshold),
+      col("a").asc, col("b").asc)
 
   /** The EXACT scale twin of [[q_containment]]: identical answer
     * (same oracle SQL), but candidates from the smaller side's

@@ -122,11 +122,13 @@ private[graft] object StageStore {
   * data AFTER a successful write; a cold session finds the marker and
   * recreates the same external-table DDL over the committed location
   * — same bucket spec, so scans come back hash-partitioned without a
-  * byte rewritten (an interrupted write leaves no marker and
-  * rebuilds). The bucket count is DATA-derived (rows / RowsPerBucket,
-  * clamped), so every session derives the same layout from the same
-  * snapshot and a 100 TB index scales its bucket count with its size
-  * instead of inheriting a local core count. */
+  * byte rewritten. The marker commits by temp-file rename, so an
+  * interrupted write leaves no marker and rebuilds; a marker that
+  * does not parse is dropped and rebuilds too. The bucket count is
+  * DATA-derived (rows / RowsPerBucket, clamped), so every session
+  * derives the same layout from the same snapshot and a 100 TB index
+  * scales its bucket count with its size instead of inheriting a
+  * local core count. */
 private[graft] object BucketedStage {
 
   /** Target rows per bucket: matches the verify-stage sizing
@@ -167,42 +169,50 @@ private[graft] object BucketedStage {
       val want = fs.makeQualified(path).toString.stripSuffix("/")
       loc == want || { spark.sql(s"DROP TABLE `$name`"); false }
     }
-    if (!entryValid) {
-      if (fs.exists(marker)) {
-        // cold session over committed files: recreate the DDL
+    // a marker that does not read back whole (a torn write from
+    // before the rename commit) is dropped: the layout rebuilds
+    def committedLayout: Option[(String, Int, Seq[String])] =
+      if (!fs.exists(marker)) None
+      else scala.util.Try {
         val in = fs.open(marker)
-        val meta =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        val parsed =
+          try org.json4s.jackson.JsonMethods.parse(
+            scala.io.Source.fromInputStream(in, "UTF-8").mkString)
           finally in.close()
-        val parsed = org.json4s.jackson.JsonMethods.parse(meta)
-        import org.json4s.DefaultFormats
-        implicit val fmts: org.json4s.DefaultFormats.type = DefaultFormats
-        val ddl = (parsed \ "schema").extract[String]
-        val n = (parsed \ "buckets").extract[Int]
-        val ks = (parsed \ "keys").extract[Seq[String]]
-        spark.sql(
-          s"""CREATE TABLE `$name` ($ddl) USING parquet
-             |CLUSTERED BY (${ks.map(k => s"`$k`").mkString(", ")})
-             |SORTED BY (${ks.map(k => s"`$k`").mkString(", ")})
-             |INTO $n BUCKETS
-             |LOCATION '${fs.makeQualified(path)}'""".stripMargin)
-      } else {
-        val df = build
-        // data-derived bucket count: every session derives the same
-        // layout from the same snapshot (a conf-derived count would
-        // let whichever session built first pin its core count)
-        val n = bucketCountFor(df.count())
-        graft.io.BucketedTables.create(df, name, fs.makeQualified(path).toString,
-          n, keys)
-        val json = org.json4s.jackson.JsonMethods.compact(
-          org.json4s.jackson.JsonMethods.render(
-            org.json4s.JObject(
-              "schema" -> org.json4s.JString(df.schema.toDDL),
-              "keys" -> org.json4s.JArray(
-                keys.map(org.json4s.JString(_)).toList),
-              "buckets" -> org.json4s.JInt(n))))
-        val out = fs.create(marker, true)
-        try out.write(json.getBytes("UTF-8")) finally out.close()
+        implicit val fmts: org.json4s.DefaultFormats.type = org.json4s.DefaultFormats
+        ((parsed \ "schema").extract[String], (parsed \ "buckets").extract[Int],
+          (parsed \ "keys").extract[Seq[String]])
+      }.toOption.orElse { fs.delete(marker, false); None }
+    if (!entryValid) {
+      committedLayout match {
+        case Some((ddl, n, ks)) =>
+          // cold session over committed files: recreate the DDL
+          spark.sql(
+            s"""CREATE TABLE `$name` ($ddl) USING parquet
+               |CLUSTERED BY (${ks.map(k => s"`$k`").mkString(", ")})
+               |SORTED BY (${ks.map(k => s"`$k`").mkString(", ")})
+               |INTO $n BUCKETS
+               |LOCATION '${fs.makeQualified(path)}'""".stripMargin)
+        case None =>
+          val df = build
+          // data-derived bucket count: every session derives the same
+          // layout from the same snapshot (a conf-derived count would
+          // let whichever session built first pin its core count)
+          val n = bucketCountFor(df.count())
+          graft.io.BucketedTables.create(df, name, fs.makeQualified(path).toString,
+            n, keys)
+          val json = org.json4s.jackson.JsonMethods.compact(
+            org.json4s.jackson.JsonMethods.render(
+              org.json4s.JObject(
+                "schema" -> org.json4s.JString(df.schema.toDDL),
+                "keys" -> org.json4s.JArray(
+                  keys.map(org.json4s.JString(_)).toList),
+                "buckets" -> org.json4s.JInt(n))))
+          // temp + rename: a reader sees the whole marker or none
+          val tmp = new org.apache.hadoop.fs.Path(path, "_graft_bucketed.json.tmp")
+          val out = fs.create(tmp, true)
+          try out.write(json.getBytes("UTF-8")) finally out.close()
+          require(fs.rename(tmp, marker), s"could not commit $marker")
       }
     }
     spark.table(name)

@@ -389,10 +389,11 @@ object TextOps {
     * read when real per-row work follows); when the input is already
     * at least core-wide (any real multi-file table), the repartition
     * branch is skipped, so nothing is paid at scale. Retired per
-    * (site, n): part of the returned lazy plan. */
+    * (site, n, input dataset): part of the returned lazy plan. */
   private def shingleIncidence(docs: DataFrame, n: Int, site: String): DataFrame = {
     val wide = graft.io.Scans.widenIfNarrow(docs, col("doc_id"))
-    graft.operators.CheckpointBlocks.retire(s"$site|n=$n",
+    graft.operators.CheckpointBlocks.retire(
+      s"$site|n=$n|${graft.operators.CheckpointBlocks.fingerprint(docs)}",
       withShingles(wide, n)
         .select(col("doc_id"), size(col("shingles")).as("n_sh"),
           explode(col("shingles")).as("shingle"))
@@ -542,7 +543,8 @@ object TextOps {
     // Three consumers (prefix explode + both verify sides) — the
     // a1b16a3 materialization rule says checkpoint, or the
     // shingle+df pipeline runs three times.
-    val keyed = graft.operators.CheckpointBlocks.retire(s"prefixJaccardPairs.keyed|n=$n",
+    val keyed = graft.operators.CheckpointBlocks.retire(
+      s"prefixJaccardPairs.keyed|n=$n|${graft.operators.CheckpointBlocks.fingerprint(docs)}",
       prefixOrderedShingles(docs, n).localCheckpoint(true))
     prefixJaccardPairsFromKeyed(keyed, p, q)
   }
@@ -572,16 +574,22 @@ object TextOps {
   private val VerifyPairsPerTask = 1024L
 
   /** The candidate+verify half of [[prefixJaccardPairs]], over an
-    * already-materialized [[prefixOrderedShingles]] table. */
+    * already-materialized [[prefixOrderedShingles]] table.
+    *
+    * NOT lazy: construction runs Spark jobs (the prefix-token and
+    * candidate checkpoints, then a count of the candidates to size
+    * the verify width), so calling it costs the candidate join even
+    * if the returned frame is never executed. */
   def prefixJaccardPairsFromKeyed(keyed: DataFrame, p: Int, q: Int): DataFrame = {
     // L = |s| − ⌈(p/q)·|s|⌉ + 1, in integer math
     val prefixLen = expr(s"n_sh - (($p * n_sh + ${q - 1}) DIV $q) + 1")
+    val keyedFp = graft.operators.CheckpointBlocks.fingerprint(keyed)
     // materialized once: it sits on both sides of the candidate
     // self-join, and the prefix posexplode over the keyed artifact
     // would otherwise run twice per invocation (retired under a site
     // key — part of the returned lazy plan)
     val pref = graft.operators.CheckpointBlocks.retire(
-      s"TextOps.prefixJaccard.pref|p=$p|q=$q",
+      s"TextOps.prefixJaccard.pref|p=$p|q=$q|$keyedFp",
       keyed.select(col("doc_id"), col("n_sh"),
         posexplode(slice(col("toks"), lit(1), prefixLen)))
         .select(col("doc_id"), col("n_sh"), (col("pos") + 1).as("pos"),
@@ -616,11 +624,11 @@ object TextOps {
     // 5–6 tasks on 32 cores. Materialize the (tiny) candidate pair
     // set once — the candidate join executes exactly once either way;
     // the checkpoint is part of the returned plan, so it retires per
-    // (p, q) site — count it, and hash-repartition the pairs to a
+    // (p, q, keyed dataset) site — count it, and hash-repartition the pairs to a
     // width derived from that count. Tiny specs stay 1 task; the
     // clamp bounds task mint at cluster scale.
     val cand0 = graft.operators.CheckpointBlocks.retire(
-      s"TextOps.prefixJaccard.cand|p=$p|q=$q",
+      s"TextOps.prefixJaccard.cand|p=$p|q=$q|$keyedFp",
       filtered.localCheckpoint(true))
     val nPairs = cand0.count()
     val width = math.max(1L, math.min(
@@ -768,11 +776,12 @@ object TextOps {
     // branches the shingle+simhash pass ran twice per invocation, and
     // a single-file snapshot pinned it to 1 scan task (round-13; the
     // shingleIncidence rationale). Computed once, core-wide,
-    // checkpointed, retired per (n) site.
+    // checkpointed, retired per (n, input dataset) site.
     val s = withSimhash(graft.io.Scans.widenIfNarrow(docs, col("doc_id")), n)
       .select("doc_id", "simhash")
     val bandArr = array((0 until 4).map(j => col("simhash").substr(j * 16 + 1, 16)): _*)
-    val br = graft.operators.CheckpointBlocks.retire(s"TextOps.simhash.br|n=$n",
+    val br = graft.operators.CheckpointBlocks.retire(
+      s"TextOps.simhash.br|n=$n|${graft.operators.CheckpointBlocks.fingerprint(docs)}",
       s.select(col("doc_id"), col("simhash"),
         posexplode(bandArr).as(Seq("band_idx", "band_val")))
         .localCheckpoint(true))

@@ -398,6 +398,32 @@ class PipelineOpsSpec extends SparkSpec {
     CheckpointBlocks.free(df3) // leave no blocks behind for other suites
   }
 
+  test("retire: operator sites are keyed by their input, so two built frames both execute") {
+    import graft.operators.CheckpointBlocks
+    import graft.text.TextOps
+    val docsA = Seq((0L, "the quick brown fox jumps over the lazy dog"),
+      (1L, "the quick brown fox jumps over the lazy cat"),
+      (2L, "completely different words appear here today")).toDF("doc_id", "text")
+    val docsB = Seq((10L, "lorem ipsum dolor sit amet consectetur adipiscing"),
+      (11L, "lorem ipsum dolor sit amet consectetur elit")).toDF("doc_id", "text")
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("a", "b").as[(Long, Long)].collect().toSet
+    val expectA = pairs(TextOps.ngramJaccardPairs(docsA, 3, 0.5))
+    val expectB = pairs(TextOps.ngramJaccardPairs(docsB, 3, 0.5))
+    assert(expectA == Set((0L, 1L)) && expectB == Set((10L, 11L)))
+    // both built before either executes: under one shared site key,
+    // building B's shingle checkpoint freed A's live blocks
+    val a = TextOps.ngramJaccardPairs(docsA, 3, 0.5)
+    val b = TextOps.ngramJaccardPairs(docsB, 3, 0.5)
+    assert(pairs(a) == expectA)
+    assert(pairs(b) == expectB)
+    // the key is stable across re-reads of one snapshot, so serial
+    // reruns over it still free their predecessor
+    assert(CheckpointBlocks.fingerprint(graft.io.Tables.table(spark, sf, "documents")) ==
+      CheckpointBlocks.fingerprint(graft.io.Tables.table(spark, sf, "documents")))
+    CheckpointBlocks.free(Seq(a, b))
+  }
+
   // ---- weighted sampling / rank fusion -----------------------------
 
   test("weighted sample: k per source, deterministic, ES key favors long docs") {

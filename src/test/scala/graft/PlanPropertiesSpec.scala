@@ -120,16 +120,22 @@ class PlanPropertiesSpec extends SparkSpec {
     }
   }
 
+  test("contract-sort queries sort over their lazy pre-sort segment, not a checkpoint") {
+    import org.apache.spark.sql.catalyst.plans.logical.{RepartitionOperation, Sort}
+    Seq("q_dedup_ngram", "q_ssjoin", "q_dedup_simhash", "q_repetition",
+      "q_exact_substring", "q_fuzzy_join", "q_containment", "q_quantiles",
+      "q_explode_normalize").foreach { n =>
+      val plan = SparkEntry.queries(n)(spark, dir).queryExecution.optimizedPlan
+      plan match {
+        case s: Sort if s.global =>
+          assert(s.child.isInstanceOf[RepartitionOperation], s"$n:\n$plan")
+        case _ => fail(s"$n: no top-level global Sort:\n$plan")
+      }
+    }
+  }
+
   test("exact-substring: documents scan prunes to (doc_id, text); partial aggs map-side") {
-    // round-13: the declared query materializes its output before the
-    // contract sort, so the declared plan is Sort-over-ExistingRDD —
-    // the scan-pruning property lives on the underlying operator frame
-    // (w = 5 mirrors CorpusQueries.ExactSubstrW)
-    val df = graft.text.TextOps.exactSubstringDedup(
-      graft.io.Tables.table(spark, dir, "documents"), 5)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString()
-      .split("== Initial Plan ==")(0)
+    val p = planOf("q_exact_substring")
     val read = "ReadSchema: [^\\n]*".r.findFirstIn(p).getOrElse("")
     assert(read.contains("doc_id") && read.contains("text"), p)
     assert(!read.contains("lang") && !read.contains("source"), read)
@@ -172,19 +178,7 @@ class PlanPropertiesSpec extends SparkSpec {
   }
 
   test("fuzzy join: candidate generation is an equi-join, verify is post-dedup") {
-    // round-13: the declared query materializes verified pairs before
-    // the contract sort, so the declared plan is Sort-over-ExistingRDD
-    // — the join-shape properties live on the verify frame the query
-    // checkpoints (same staged index, same width derivation)
-    val df = graft.operators.FuzzyJoin.selfJoinDist1FromIndex(
-      graft.queries.DedupStage.customerNameIndexPartitioned(spark, dir),
-      graft.io.Tables.table(spark, dir, "customer")
-        .selectExpr("c_custkey as bid", "c_name as bstr"),
-      verifyPartitions = Some(graft.operators.FuzzyJoin.verifyPartitionsFor(
-        spark, graft.queries.DedupStage.customerNameIndexSize(spark, dir))))
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString()
-      .split("== Initial Plan ==")(0)
+    val p = planOf("q_fuzzy_join")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
     assert(p.contains("levenshtein"), p)

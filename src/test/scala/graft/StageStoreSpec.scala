@@ -197,4 +197,31 @@ class StageStoreSpec extends SparkSpec {
       graft.queries.Stages.clearAllForTesting()
     }
   }
+
+  test("bucketed layout: a truncated marker is dropped and the layout rebuilds") {
+    import graft.queries.BucketedStage
+    import spark.implicits._
+    val wh = warehouse("bkt_torn")
+    val tableDir = Paths.get(wh, "bucketed", "torn")
+    Files.createDirectories(tableDir)
+    // a marker torn mid-write: the JSON stops inside the schema string
+    Files.write(tableDir.resolve("_graft_bucketed.json"),
+      "{\"schema\":\"k BIGINT, v ST".getBytes("UTF-8"))
+    var builds = 0
+    val rows = Seq((1L, "a"), (2L, "b"), (3L, "c"))
+    val t = BucketedStage.resolve(spark, wh, "torn", Seq("k")) {
+      builds += 1
+      rows.toDF("k", "v")
+    }
+    try {
+      assert(builds == 1, "a torn marker must rebuild, not recreate DDL")
+      assert(t.orderBy("k").as[(Long, String)].collect().toSeq == rows)
+      // the rebuilt marker is committed whole (no temp file left)
+      val marker = new String(
+        Files.readAllBytes(tableDir.resolve("_graft_bucketed.json")), "UTF-8")
+      assert((org.json4s.jackson.JsonMethods.parse(marker) \ "buckets") ==
+        org.json4s.JInt(1), marker)
+      assert(!Files.exists(tableDir.resolve("_graft_bucketed.json.tmp")))
+    } finally spark.sql(s"DROP TABLE IF EXISTS `${BucketedStage.catalogName(wh, "torn")}`")
+  }
 }

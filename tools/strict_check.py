@@ -3,7 +3,7 @@
 
 Usage: python3 tools/strict_check.py <verify_out_dir> <sf_dir> [query ...]
 
-Beyond tools/oracle_check.py (Python `==`, which treats 1 == 1.0 ==
+Beyond a value-level compare (Python `==`, which treats 1 == 1.0 ==
 Decimal('1.00')), this gate requires, per query:
   1. identical sorted column names,
   2. identical DuckDB logical types per column once BOTH sides pass
