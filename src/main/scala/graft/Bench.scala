@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import graft.operators.CheckpointBlocks
 object Bench {
 
   /** Execute the FULL declared query and return its row count.
@@ -105,14 +106,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to the real core count (the target box is local[32]);
     // SPARK_GRAFT_CPUS still overrides for reproducibility runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = SparkEntry.localSession(cpus)
     // ERROR, not WARN: the round-10 artifact's archived 2000-char tail
     // was 100% benign `RDD locally checkpointed` / `large task binary`
     // WARN spam fighting the JSON line. Bench's own failure reporting
@@ -333,7 +329,7 @@ object Bench {
       for ((name, fn) <- names) {
         val t0 = System.nanoTime()
         val ok =
-          try { execute(fn(spark, sfDir)); true }
+          try { CheckpointBlocks.scoped(execute(fn(spark, sfDir))); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED (rep $rep): ${e.getMessage}")
             failed += name
@@ -416,7 +412,7 @@ object Bench {
       if (ts.nonEmpty && ts.max / math.max(ts.min, 1e-9) >= 2.0) {
         val t0 = System.nanoTime()
         try {
-          execute(fn(spark, sfDir))
+          CheckpointBlocks.scoped(execute(fn(spark, sfDir)))
           val sec = (System.nanoTime() - t0) / 1e9
           retimed(name) = sec
           ts += sec
@@ -442,7 +438,7 @@ object Bench {
           if elapsedS + postSweepReserveS <= budgetS) {
         val t0 = System.nanoTime()
         try {
-          execute(fn(spark, sfDir))
+          CheckpointBlocks.scoped(execute(fn(spark, sfDir)))
           val sec = (System.nanoTime() - t0) / 1e9
           retimed(name) = sec
           times.getOrElseUpdate(name,
@@ -543,7 +539,7 @@ object Bench {
     // the r12 verdict's top contract item). The FINAL printed line is
     // therefore a COMPACT summary, built below, guaranteed to fit the
     // archived tail: same `value`/methodology, top-25 per-query mins.
-    println(s"""{"metric":"total_full","unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_done":$repsDone,"budget_s":${r3(budgetS)},"agg":"min","interleaved":true,"events_ts":"$eventsTsKind","tables":$tablesField,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,$perStage,"staged_sec":${r3(staged)},"staged_ttstore_sec":${r3(ttStoreSec)},"staged_cold_sec":${r3(stagedColdSec)},"staged_warm_sec":${r3(stagedWarmSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},"staged_warm_sample_sec":${r3(warmSampleSec)},$warmArtifactField"corpus_day_setup":"eval%${graft.text.Curation.Config().evalModulus}|30/10",$corpusSkipField"corpus_day_sec":${r3(corpusDaySec)},$retimedField$spreadField"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},$errField"value":${r3(total)}}""")
+    println(s"""{"metric":"total_full","unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_done":$repsDone,"budget_s":${r3(budgetS)},"agg":"min","interleaved":true,"events_ts":"$eventsTsKind","tables":$tablesField,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,$perStage,"ckpt_freed":${CheckpointBlocks.scopeFreed.get},"staged_sec":${r3(staged)},"staged_ttstore_sec":${r3(ttStoreSec)},"staged_cold_sec":${r3(stagedColdSec)},"staged_warm_sec":${r3(stagedWarmSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},"staged_warm_sample_sec":${r3(warmSampleSec)},$warmArtifactField"corpus_day_setup":"eval%${graft.text.Curation.Config().evalModulus}|30/10",$corpusSkipField"corpus_day_sec":${r3(corpusDaySec)},$retimedField$spreadField"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},$errField"value":${r3(total)}}""")
     // COMPACT final line — the driver's artifact. Budget: 2000-char
     // archived tail minus ~120 chars of sbt epilogue ("[success]
     // Total time: …") minus the tail-end fragment of the full line

@@ -287,13 +287,7 @@ object DailyEtl {
           args(4), args.lift(5)), "WARN", None)
       case _ => sys.error(usage)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel(logLevel)
     val http = new Sources.HttpFetcher()
     val file = new Sources.FileFetcher(Map.empty)

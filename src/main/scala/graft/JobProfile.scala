@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage/task profile — the measurement tool behind the
   * round-12 optimization pass (guide §1: decide whether a query is
@@ -17,14 +16,9 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = SparkEntry.localSession(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     import graft.queries.{StageStore, Stages}
@@ -67,7 +61,9 @@ object JobProfile {
     }
     val perStage = sys.env.contains("GRAFT_PROFILE_STAGES")
     println(f"${"query"}%-28s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s ${"taskS"}%8s ${"shufMB"}%7s")
-    for (q <- args) {
+    // one scope per query: its executions' checkpoints are
+    // freed before the next query builds
+    for (q <- args) graft.operators.CheckpointBlocks.scoped {
       val fn = SparkEntry.queries(q)
       Bench.execute(fn(spark, sfDir)) // warmup rep (codegen, broadcast warm)
       spark.sparkContext.addSparkListener(listener)

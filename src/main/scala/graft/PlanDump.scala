@@ -18,10 +18,7 @@ object PlanDump {
     val outDir = new java.io.File(args(0))
     outDir.mkdirs()
     val suffix = args(1)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names =
@@ -45,7 +42,8 @@ object PlanDump {
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
             explained(build(spark))
           } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        case None => explained(SparkEntry.queries(q)(spark, dir))
+        case None => graft.operators.CheckpointBlocks.scoped(
+          explained(SparkEntry.queries(q)(spark, dir)))
       }
       val f = new java.io.File(outDir, s"${q}_$suffix.txt")
       val w = new java.io.PrintWriter(f, "UTF-8")

@@ -15,6 +15,16 @@ import graft.queries.{AdvancedQueries, BehaviorQueries, ChartQueries, CorpusQuer
   */
 object SparkEntry {
 
+  /** The local-mode session the mains and specs run on: `cpus` worker
+    * threads and as many shuffle partitions, UTC, no UI. */
+  def localSession(cpus: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** Flagship (SURVEY.md §7.5): LAG-gated day-over-day rank delta of the
     * daily top-10 entities per platform — the reference's
     * all_rankings_with_delta_view (W1+W2+O2) over the events fact. */

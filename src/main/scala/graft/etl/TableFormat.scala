@@ -141,10 +141,8 @@ trait TableFormat {
     // materialize the RETURNING set ONCE: without it the anti-join
     // chain over the full table runs three times (empty guard, the
     // commit's recompute of existing∪inserted, the caller's action on
-    // the returned frame). Generation-freed per table — by the next
-    // merge the previous RETURNING has been consumed.
-    val inserted = graft.operators.CheckpointBlocks.retire(
-      s"mergeInsert.$table", inserted0.localCheckpoint(true))
+    // the returned frame)
+    val inserted = graft.operators.CheckpointBlocks.local(inserted0)
     if (inserted.isEmpty) inserted
     // the merged state IS existing ∪ inserted — commit it as an
     // APPEND of the survivors onto the version the anti-joins saw,
@@ -166,8 +164,7 @@ trait TableFormat {
       Load.updateColumn(readVersion(table, base), updates, key, valueCol)
     // same one-execution discipline as mergeInsert: the fill join
     // otherwise runs for the guard, the commit, and the caller's read
-    val returning = graft.operators.CheckpointBlocks.retire(
-      s"mergeUpdateIfNull.$table", returning0.localCheckpoint(true))
+    val returning = graft.operators.CheckpointBlocks.local(returning0)
     if (returning.isEmpty) returning
     else { tryCommit(table, newState, base); returning }
   }

@@ -1,85 +1,84 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Frees the storage blocks behind a `localCheckpoint(eager = true)`
-  * Dataset. `Dataset.unpersist` routes through the CacheManager,
-  * which has NO entry for a checkpoint's persisted RDD — calling it
-  * on a checkpointed frame is a silent no-op, and iterative
-  * algorithms (PageRank, connected components) would accumulate one
-  * |V|-sized block set per round until ContextCleaner GC happens to
-  * run. The persisted RDD is reachable from the frame's physical
-  * scan, so walk the (one-node-deep, post-checkpoint) RDD lineage and
-  * unpersist anything holding storage.
+/** Lifetimes of the storage blocks behind `localCheckpoint(eager = true)`
+  * frames. A local checkpoint's blocks ARE its data — its lineage is
+  * truncated, so a freed checkpoint cannot be recomputed and any plan
+  * still reading it fails. Two rules follow:
   *
-  * Only call on frames whose blocks nothing will read again: a local
-  * checkpoint's blocks ARE its data — they cannot be recomputed.
-  * Spark logs a WARN ("lineage has been truncated and cannot be
-  * recomputed") per freed checkpoint; that is the expected contract
+  *  - An iterative loop frees its superseded rounds in line with
+  *    [[free]] (PageRank, connected components, the peels): nothing
+  *    reads a spent round again.
+  *  - A checkpoint embedded in a RETURNED lazy plan must outlive the
+  *    function that built it, because the caller has not executed the
+  *    plan yet. Such sites call [[local]], which registers the
+  *    checkpoint with the innermost [[scoped]] block open on the
+  *    current thread; closing that block frees it. The code that runs
+  *    plans owns the scope (a Bench rep, a Verify query, a spec test),
+  *    so every plan built inside a scope stays readable until the
+  *    scope ends, however many plans are built before any runs.
+  *
+  * With no scope open, [[local]] does not track the checkpoint and
+  * Spark's ContextCleaner reclaims it once nothing references it.
+  * Session-wide artifacts (StageCache) never go through [[local]]: the
+  * first query's scope would free them.
+  *
+  * `Dataset.unpersist` routes through the CacheManager, which has NO
+  * entry for a checkpoint's persisted RDD, so it is a silent no-op on
+  * a checkpointed frame. The persisted RDD is reachable from the
+  * frame's physical scan, so [[free]] walks the (one-node-deep,
+  * post-checkpoint) RDD lineage and unpersists anything holding
+  * storage. Spark logs a WARN ("lineage has been truncated and cannot
+  * be recomputed") per freed checkpoint; that is the expected contract
   * here, not a defect. */
 private[graft] object CheckpointBlocks {
 
-  def free(df: DataFrame): Unit = {
-    def walk(r: RDD[_]): Unit = {
-      if (r.getStorageLevel != StorageLevel.NONE) r.unpersist(blocking = false)
-      r.dependencies.foreach(d => walk(d.rdd))
+  /** Unpersists every RDD in `df`'s lineage that holds storage and
+    * returns how many it unpersisted. */
+  def free(df: DataFrame): Int = {
+    def walk(r: RDD[_]): Int = {
+      val own =
+        if (r.getStorageLevel == StorageLevel.NONE) 0
+        else { r.unpersist(blocking = false); 1 }
+      own + r.dependencies.map(d => walk(d.rdd)).sum
     }
     walk(df.queryExecution.toRdd)
   }
 
   def free(dfs: Iterable[DataFrame]): Unit = dfs.foreach(free)
 
-  private final case class Registration(threadId: Long, df: DataFrame)
+  /** Open scopes on this thread, innermost first. */
+  private val open =
+    ThreadLocal.withInitial[List[ArrayBuffer[DataFrame]]](() => Nil)
 
-  private val lastPerSite =
-    scala.collection.concurrent.TrieMap.empty[String, Registration]
+  /** RDDs freed by closed scopes, process-wide. */
+  private[graft] val scopeFreed = new AtomicLong(0)
 
-  /** For checkpoints embedded in a RETURNED lazy plan: the blocks must
-    * outlive the query function (the caller hasn't executed yet), so
-    * they can't be freed in-line like a loop's superseded rounds.
-    * Registering under a stable `site` key frees the PREVIOUS
-    * registrant's blocks instead — a long-lived session (Bench's reps,
-    * a notebook) holds at most one live set per call site rather than
-    * accumulating one per invocation.
-    *
-    * Contract: by the time a site is invoked again, its prior result
-    * has been consumed — SERIAL re-invocation per site. Concurrent
-    * executions of the same site (two threads/sessions racing the same
-    * query) are DETECTED AND DEGRADED, not corrupted: freeing a
-    * concurrent caller's still-live blocks would fail it
-    * unrecoverably (a local checkpoint's lineage is truncated — no
-    * recompute path), so a re-registration from a DIFFERENT thread
-    * than the previous registrant's skips the free and leaves those
-    * blocks to ContextCleaner GC — a bounded leak instead of a
-    * wrong-answer/crash. Same-thread re-registration (Bench's serial
-    * reps, Verify's loop, a notebook) frees eagerly as before. Sites
-    * are additionally scoped by applicationId so a different
-    * SparkContext can never free this one's blocks; the
-    * staged-artifact prewarm fans out across DIFFERENT artifacts,
-    * never the same retire site, so it always takes the eager path. */
-  def retire(site: String, df: DataFrame): DataFrame = {
-    val key = s"${df.sparkSession.sparkContext.applicationId}|$site"
-    val me = Thread.currentThread().getId
-    lastPerSite.put(key, Registration(me, df)).foreach { prev =>
-      if (prev.threadId == me) free(prev.df)
-      else concurrentSkips.incrementAndGet()
+  /** Runs `body` in a new scope on the current thread; when it returns
+    * or throws, frees every checkpoint [[local]] registered in it. */
+  def scoped[T](body: => T): T = {
+    val outer = open.get
+    val mine = ArrayBuffer.empty[DataFrame]
+    open.set(mine :: outer)
+    try body
+    finally {
+      open.set(outer)
+      mine.foreach(cp => scopeFreed.addAndGet(free(cp)))
     }
-    df
   }
 
-  /** A site-key component naming the dataset an operator-level
-    * checkpoint was built from (the query-level sites scope by their
-    * `|$dir` instead): two inputs through one operator must not share
-    * a site, or building the second frees the first's live blocks.
-    * Stable across re-reads of the same snapshot, so serial reruns
-    * still free their predecessor. */
-  def fingerprint(df: DataFrame): String =
-    Integer.toHexString(df.queryExecution.analyzed.semanticHash())
-
-  /** Cross-thread re-registrations that skipped the eager free
-    * (observability for the degraded path — a growing count means a
-    * caller is racing one site and leaning on ContextCleaner). */
-  private[graft] val concurrentSkips = new java.util.concurrent.atomic.AtomicLong(0)
+  /** An eager local checkpoint of `df`, freed when the innermost open
+    * scope closes (untracked when none is open). */
+  def local(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(true)
+    open.get.headOption.foreach(_ += cp)
+    cp
+  }
 }

@@ -21,9 +21,9 @@ import org.apache.spark.sql.functions._
   * on.
   *
   * Checkpoint hygiene follows k-core/PageRank: per-round eager
-  * localCheckpoint truncates lineage, superseded rounds free
-  * immediately, and the returned final state retires under
-  * `retireSite` (freed by the NEXT invocation — it is part of the
+  * checkpoints truncate lineage, superseded rounds free immediately,
+  * and the returned final state lives until the caller's
+  * [[CheckpointBlocks.scoped]] block closes (it is part of the
   * returned lazy plan, so it must outlive this call).
   */
 object KTruss {
@@ -43,12 +43,12 @@ object KTruss {
     *   bit-equality of the two layouts; an unconditional hint would
     *   be attempted regardless of size and fail as an OOM rather
     *   than degrade to a sort-merge join).
-    * @return (final state — every row ≥ its min_sup iff converged,
-    *   retired under `retireSite`; whether a round observed an empty
+    * @return (final state — every row ≥ its min_sup iff converged;
+    *   whether a round observed an empty
     *   removal set). A cap exit can still be converged if the last
     *   round removed the final sub-threshold edges — callers decide
     *   whether to verify or refuse. */
-  def peel(state0: DataFrame, maxRounds: Int, retireSite: String,
+  def peel(state0: DataFrame, maxRounds: Int,
       broadcastTrickle: Boolean = true): (DataFrame, Boolean) = {
     // every hint site below guards on the flag through this — the
     // no-broadcast layout is the identical dataflow minus hints
@@ -62,8 +62,8 @@ object KTruss {
     var state = state0.select("u", "v", "support", "min_sup")
     var spent = List.empty[DataFrame]
     // whether `state` is a checkpoint THIS loop produced: only those
-    // may ever be freed or retired — the caller's lazy state0 has the
-    // staged support artifact in its lineage, and free/retire walk
+    // may ever be freed — the caller's lazy state0 has the
+    // staged support artifact in its lineage, and free walks
     // the full RDD lineage unpersisting anything with storage, which
     // would destroy the artifact's unrecomputable checkpoint blocks
     // for the whole session (the q_kcore "staged artifact: NEVER
@@ -134,12 +134,12 @@ object KTruss {
         val removedKeys = bc(removed.select("u", "v"))
         val dec = triEdges.join(removedKeys, Seq("u", "v"), "left_anti")
           .groupBy("u", "v").agg(count(lit(1)).as("dec"))
-        val next = state.join(removedKeys, Seq("u", "v"), "left_anti")
-          .join(bc(dec), Seq("u", "v"), "left")
-          .select(col("u"), col("v"),
-            (col("support") - coalesce(col("dec"), lit(0L))).cast("int").as("support"),
-            col("min_sup"))
-          .localCheckpoint(true)
+        val next = CheckpointBlocks.local(
+          state.join(removedKeys, Seq("u", "v"), "left_anti")
+            .join(bc(dec), Seq("u", "v"), "left")
+            .select(col("u"), col("v"),
+              (col("support") - coalesce(col("dec"), lit(0L))).cast("int").as("support"),
+              col("min_sup")))
         if (owned) spent ::= state
         state = next
         owned = true
@@ -147,7 +147,6 @@ object KTruss {
       }
     }
     CheckpointBlocks.free(spent)
-    if (owned) (CheckpointBlocks.retire(retireSite, state), done)
-    else (state, done)
+    (state, done)
   }
 }

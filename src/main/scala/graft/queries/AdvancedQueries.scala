@@ -96,9 +96,8 @@ object AdvancedQueries {
     // (doc, term) counts feed both the document frequencies and the
     // scoring join — checkpoint so the explode+count runs once (the
     // materialize-the-TF-table call every TF-IDF pipeline makes)
-    val tf = graft.operators.CheckpointBlocks.retire(s"q_tfidf.tf|$dir",
-      tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true))
+    val tf = graft.operators.CheckpointBlocks.local(
+      tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val n = docs.select(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy("doc_id")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   * puts that boundary there: the segment runs once into shuffle files,
   * and both the sample and the sort read them. Unlike an eager
   * `localCheckpoint`, the plan stays lazy (no job at construction, no
-  * `ExistingRDD` under the `Sort`) and owns no blocks to retire.
+  * `ExistingRDD` under the `Sort`) and owns no blocks to free.
   *
   * Only for segments whose recompute costs more than one extra
   * exchange; a cheap segment sorts with a plain `orderBy`. */

@@ -362,11 +362,9 @@ object CorpusQueries {
       .select(col("doc_id").as("asset_id"),
         encode(col("text"), "UTF-8").as("media"))
     // the batch's band rows feed BOTH the index probe and the
-    // intra-batch join — compute them once; the checkpoint lives in
-    // the returned lazy plan, so it retires per call site
-    val batchBands = graft.operators.CheckpointBlocks.retire(
-      s"q_phash_incremental.batchBands|$dir",
-      graft.multimodal.Multimodal.phashBandRows(batch).localCheckpoint(true))
+    // intra-batch join — compute them once
+    val batchBands = graft.operators.CheckpointBlocks.local(
+      graft.multimodal.Multimodal.phashBandRows(batch))
     val index = DedupStage.phashPriorIndex(spark, dir)
     graft.multimodal.Multimodal.phashNearPairsAgainstIndex(index, batchBands)
       .unionByName(

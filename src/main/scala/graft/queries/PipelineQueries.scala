@@ -206,8 +206,8 @@ object PipelineQueries {
   def q_bm25_incremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.table(spark, dir, "documents")
     val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-    val b1 = bm25Base(docs.where(col("doc_id") <= mid), s"q_bm25_inc.b1|$dir")
-    val b2 = bm25Base(docs.where(col("doc_id") > mid), s"q_bm25_inc.b2|$dir")
+    val b1 = bm25Base(docs.where(col("doc_id") <= mid))
+    val b2 = bm25Base(docs.where(col("doc_id") > mid))
     val merged = bm25MergeStats(bm25Stats(b1).unionByName(bm25Stats(b2)))
     scoreBm25(b1.unionByName(b2), merged).orderBy(col("doc_id").asc)
   }
@@ -249,10 +249,9 @@ object PipelineQueries {
     * [[q_bm25]] and [[CorpusQueries.q_rank_fusion]]'s lexical arm. */
   /** Per-doc (dl, tf per fixed term) — the map-side pass both the
     * corpus stats and the scoring join read; checkpointed so the
-    * tokenize pass runs once (retire-managed per site). */
-  private def bm25Base(docs: DataFrame, site: String): DataFrame =
-    graft.operators.CheckpointBlocks.retire(site,
-      bm25BaseFrame(docs).localCheckpoint(true))
+    * tokenize pass runs once. */
+  private def bm25Base(docs: DataFrame): DataFrame =
+    graft.operators.CheckpointBlocks.local(bm25BaseFrame(docs))
 
   /** The tokenize → per-doc (dl, tf per term) projection alone —
     * cadence-agnostic (the streaming stats maintainer maps the same
@@ -285,7 +284,7 @@ object PipelineQueries {
   }
 
   private[queries] def bm25Scores(spark: SparkSession, dir: String): DataFrame = {
-    val base = bm25Base(Tables.table(spark, dir, "documents"), s"q_bm25.base|$dir")
+    val base = bm25Base(Tables.table(spark, dir, "documents"))
     scoreBm25(base, bm25Stats(base))
   }
 
@@ -624,11 +623,10 @@ object PipelineQueries {
     // (source, term) counts feed both the totals and the entropy sum —
     // checkpoint the vocabulary-bounded aggregate so the corpus
     // explode+count runs once, not twice
-    val cnt = graft.operators.CheckpointBlocks.retire(s"q_entropy.cnt|$dir",
+    val cnt = graft.operators.CheckpointBlocks.local(
       Tables.table(spark, dir, "documents")
         .select(col("source"), explode(split(col("text"), " ")).as("t"))
-        .groupBy("source", "t").agg(count(lit(1)).as("c"))
-        .localCheckpoint(true))
+        .groupBy("source", "t").agg(count(lit(1)).as("c")))
     val tot = cnt.groupBy("source")
       .agg(sum(col("c")).as("tot"), count(lit(1)).as("n_types"))
     cnt.join(broadcast(tot), "source")

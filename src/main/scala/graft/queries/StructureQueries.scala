@@ -137,13 +137,10 @@ object StructureQueries {
     // the authority top-k — as a lazy plan its incidence join + agg
     // executed twice per invocation (the broadcast subtree and the
     // top-k subtree don't share an exchange). Materialize it once;
-    // retired under a site key because it is part of the returned
-    // lazy plan (the q_kcore discipline). localCheckpoint preserves
-    // partitioning, so the co-partitioned layout keeps its
-    // exchange-free joins.
-    val a2 = graft.operators.CheckpointBlocks.retire(s"hits.a2|bc=$broadcastState|$dir",
-      eByC.join(st(h1), "c").groupBy("p").agg(sum(col("s")).as("s"))
-        .localCheckpoint(true))
+    // localCheckpoint preserves partitioning, so the co-partitioned
+    // layout keeps its exchange-free joins.
+    val a2 = graft.operators.CheckpointBlocks.local(
+      eByC.join(st(h1), "c").groupBy("p").agg(sum(col("s")).as("s")))
     val h2 = eByP.join(st(a2), "p").groupBy("c").agg(sum(col("s")).as("s"))
     def top(df: DataFrame, side: String, idCol: String): DataFrame =
       df.orderBy(col("s").desc, col(idCol).asc).limit(HitsTopK)
@@ -316,15 +313,10 @@ object StructureQueries {
       broadcastTrickle: Boolean): DataFrame = {
     // both peel inputs are staged snapshot artifacts — the per-call
     // residue is the peel rounds themselves plus the final order-by.
-    // The retire site carries dir + layout so two datasets (or both
-    // layouts, e.g. the spec's equality sweep) never share a slot —
-    // sharing would free the first plan's truncated-lineage blocks
-    // while a caller still holds it.
     val sup0 = GraphStage.copurchaseEdgeSupport(spark, dir)
     val ms = GraphStage.copurchaseTrussThreshold(spark, dir, TrussPctDenom)
     val (finalState, done) = graft.operators.KTruss.peel(
-      sup0.crossJoin(broadcast(ms)), TrussRounds,
-      s"q_ktruss.state|bc=$broadcastTrickle|$dir", broadcastTrickle)
+      sup0.crossJoin(broadcast(ms)), TrussRounds, broadcastTrickle)
     // both sides gate on the FIXPOINT (see the bounds comment above
     // TrussRounds): a non-converged state must refuse rather than
     // diverge. Convergence is observed (`done`) or verified on the
@@ -444,7 +436,7 @@ object StructureQueries {
     // (≤ n/50 rows in round 1 by construction of k, a trickle after)
     // and updates the tiny (node, deg) state — no per-round degree
     // recompute over E, no shuffle of the edge list.
-    var state = deg0.crossJoin(kB).localCheckpoint(true) // node, deg, k
+    var state = graft.operators.CheckpointBlocks.local(deg0.crossJoin(kB)) // node, deg, k
     var spent = List.empty[DataFrame] // superseded round checkpoints
     var round = 0
     var done = false
@@ -461,11 +453,11 @@ object StructureQueries {
         // is the round's one tiny shuffle)
         val dec = directed.join(bc(removed), "node")
           .groupBy(col("nbr").as("node")).agg(count(lit(1)).as("dec"))
-        val next = state.where(col("deg") >= col("k"))
-          .join(bc(dec), Seq("node"), "left")
-          .select(col("node"),
-            (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"), col("k"))
-          .localCheckpoint(true)
+        val next = graft.operators.CheckpointBlocks.local(
+          state.where(col("deg") >= col("k"))
+            .join(bc(dec), Seq("node"), "left")
+            .select(col("node"),
+              (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"), col("k")))
         spent ::= state
         state = next
         round += 1
@@ -480,14 +472,8 @@ object StructureQueries {
     // NEVER freed here.
     graft.operators.CheckpointBlocks.free(spent)
     graft.operators.CheckpointBlocks.free(kCp)
-    // the final state itself is freed on the NEXT invocation (it is
-    // part of the returned lazy plan, so it must outlive this call);
-    // registering BEFORE the convergence check below means a failure
-    // path strands at most this one set — the next call reclaims it
-    // site scoped by dir + layout: two datasets (or the spec's
-    // two-layout equality sweep) must never share a retire slot
-    val finalState = graft.operators.CheckpointBlocks.retire(
-      s"q_kcore.state|bc=$broadcastTrickle|$dir", state)
+    // the final state itself is part of the returned lazy plan: it
+    // lives until the caller's scope closes, on the failure path too
     // the oracle unrolls exactly KCoreRounds peels and then drops
     // isolated nodes via a final degree recompute; a non-converged
     // Spark state would keep survivors at maintained degree 0 and
@@ -496,10 +482,10 @@ object StructureQueries {
     // final state (the peel may remove its last sub-k nodes in round
     // KCoreRounds exactly — a converged state the loop exits on
     // without observing a no-op round).
-    require(done || finalState.where(col("deg") < col("k")).isEmpty,
+    require(done || state.where(col("deg") < col("k")).isEmpty,
       s"q_kcore: peel did not reach fixpoint within $KCoreRounds rounds; " +
         "raise KCoreRounds (the oracle unrolls the same bound)")
-    finalState
+    state
       .select(col("node"), col("deg").as("core_deg"), col("k"))
       .orderBy(col("node").asc)
   }

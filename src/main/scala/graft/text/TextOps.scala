@@ -388,20 +388,17 @@ object TextOps {
     * serialized there (guide §2.5 — repartition right after a narrow
     * read when real per-row work follows); when the input is already
     * at least core-wide (any real multi-file table), the repartition
-    * branch is skipped, so nothing is paid at scale. Retired per
-    * (site, n, input dataset): part of the returned lazy plan. */
-  private def shingleIncidence(docs: DataFrame, n: Int, site: String): DataFrame = {
+    * branch is skipped, so nothing is paid at scale. */
+  private def shingleIncidence(docs: DataFrame, n: Int): DataFrame = {
     val wide = graft.io.Scans.widenIfNarrow(docs, col("doc_id"))
-    graft.operators.CheckpointBlocks.retire(
-      s"$site|n=$n|${graft.operators.CheckpointBlocks.fingerprint(docs)}",
+    graft.operators.CheckpointBlocks.local(
       withShingles(wide, n)
         .select(col("doc_id"), size(col("shingles")).as("n_sh"),
-          explode(col("shingles")).as("shingle"))
-        .localCheckpoint(true))
+          explode(col("shingles")).as("shingle")))
   }
 
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
-    val sh = shingleIncidence(docs, n, "TextOps.ngramJaccard.sh")
+    val sh = shingleIncidence(docs, n)
     sh.as("x")
       .join(sh.as("y"),
         col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
@@ -423,7 +420,7 @@ object TextOps {
     * clears the threshold. Exactness baseline — the scale path for
     * containment is [[exactSubstringDedup]]'s window hashing. */
   def containmentPairs(docs: DataFrame, n: Int, threshold: Double): DataFrame = {
-    val sh = shingleIncidence(docs, n, "TextOps.containment.sh")
+    val sh = shingleIncidence(docs, n)
     sh.as("x")
       .join(sh.as("y"),
         col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
@@ -543,9 +540,7 @@ object TextOps {
     // Three consumers (prefix explode + both verify sides) — the
     // a1b16a3 materialization rule says checkpoint, or the
     // shingle+df pipeline runs three times.
-    val keyed = graft.operators.CheckpointBlocks.retire(
-      s"prefixJaccardPairs.keyed|n=$n|${graft.operators.CheckpointBlocks.fingerprint(docs)}",
-      prefixOrderedShingles(docs, n).localCheckpoint(true))
+    val keyed = graft.operators.CheckpointBlocks.local(prefixOrderedShingles(docs, n))
     prefixJaccardPairsFromKeyed(keyed, p, q)
   }
 
@@ -583,18 +578,14 @@ object TextOps {
   def prefixJaccardPairsFromKeyed(keyed: DataFrame, p: Int, q: Int): DataFrame = {
     // L = |s| − ⌈(p/q)·|s|⌉ + 1, in integer math
     val prefixLen = expr(s"n_sh - (($p * n_sh + ${q - 1}) DIV $q) + 1")
-    val keyedFp = graft.operators.CheckpointBlocks.fingerprint(keyed)
     // materialized once: it sits on both sides of the candidate
     // self-join, and the prefix posexplode over the keyed artifact
-    // would otherwise run twice per invocation (retired under a site
-    // key — part of the returned lazy plan)
-    val pref = graft.operators.CheckpointBlocks.retire(
-      s"TextOps.prefixJaccard.pref|p=$p|q=$q|$keyedFp",
+    // would otherwise run twice per invocation
+    val pref = graft.operators.CheckpointBlocks.local(
       keyed.select(col("doc_id"), col("n_sh"),
         posexplode(slice(col("toks"), lit(1), prefixLen)))
         .select(col("doc_id"), col("n_sh"), (col("pos") + 1).as("pos"),
-          col("col").as("ptok"))
-        .localCheckpoint(true))
+          col("col").as("ptok")))
     // LENGTH filter (PPJoin): J ≥ p/q forces q·min(|A|,|B|) ≥
     // p·max(|A|,|B|) — applied inside the candidate join so size-
     // mismatched docs sharing a prefix token never become a pair
@@ -623,13 +614,10 @@ object TextOps {
     // hundred KB, so AQE's bytes-based coalescing ran the verify at
     // 5–6 tasks on 32 cores. Materialize the (tiny) candidate pair
     // set once — the candidate join executes exactly once either way;
-    // the checkpoint is part of the returned plan, so it retires per
-    // (p, q, keyed dataset) site — count it, and hash-repartition the pairs to a
-    // width derived from that count. Tiny specs stay 1 task; the
-    // clamp bounds task mint at cluster scale.
-    val cand0 = graft.operators.CheckpointBlocks.retire(
-      s"TextOps.prefixJaccard.cand|p=$p|q=$q|$keyedFp",
-      filtered.localCheckpoint(true))
+    // count it, and hash-repartition the pairs to a width derived
+    // from that count. Tiny specs stay 1 task; the clamp bounds task
+    // mint at cluster scale.
+    val cand0 = graft.operators.CheckpointBlocks.local(filtered)
     val nPairs = cand0.count()
     val width = math.max(1L, math.min(
       (nPairs + VerifyPairsPerTask - 1) / VerifyPairsPerTask,
@@ -776,15 +764,13 @@ object TextOps {
     // branches the shingle+simhash pass ran twice per invocation, and
     // a single-file snapshot pinned it to 1 scan task (round-13; the
     // shingleIncidence rationale). Computed once, core-wide,
-    // checkpointed, retired per (n, input dataset) site.
+    // checkpointed.
     val s = withSimhash(graft.io.Scans.widenIfNarrow(docs, col("doc_id")), n)
       .select("doc_id", "simhash")
     val bandArr = array((0 until 4).map(j => col("simhash").substr(j * 16 + 1, 16)): _*)
-    val br = graft.operators.CheckpointBlocks.retire(
-      s"TextOps.simhash.br|n=$n|${graft.operators.CheckpointBlocks.fingerprint(docs)}",
+    val br = graft.operators.CheckpointBlocks.local(
       s.select(col("doc_id"), col("simhash"),
-        posexplode(bandArr).as(Seq("band_idx", "band_val")))
-        .localCheckpoint(true))
+        posexplode(bandArr).as(Seq("band_idx", "band_val"))))
     // Hamming over 64-char bit-strings as codegen builtins, in two
     // 32-bit halves (a full 64-char parse could overflow signed
     // conv): parse base-2 → xor → popcount per half. Equal to the

@@ -141,13 +141,9 @@ object VectorOps {
     // sides of the self-join, and the signature expression (tables ×
     // planes hyperplane dots over the embedding array) would
     // otherwise evaluate twice per vector — the dominant CPU of the
-    // bucketing pass. Tiny frame (|V| × tables short rows); retired
-    // under a site key since it is part of the returned lazy plan.
-    val ids = graft.operators.CheckpointBlocks.retire(
-      s"VectorOps.nearDupPairsLsh.ids|t=${tables.length}x${tables.head.length}",
-      vecs.select(col("vec_id"),
-        posexplode(sigs).as(Seq("table_idx", "sig")))
-        .localCheckpoint(true))
+    // bucketing pass. Tiny frame (|V| × tables short rows).
+    val ids = graft.operators.CheckpointBlocks.local(
+      vecs.select(col("vec_id"), posexplode(sigs).as(Seq("table_idx", "sig"))))
     val candIds = ids.as("x")
       .join(ids.as("y"),
         col("x.table_idx") === col("y.table_idx") &&

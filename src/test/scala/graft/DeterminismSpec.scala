@@ -22,7 +22,8 @@ class DeterminismSpec extends SparkSpec {
       graft.queries.LmStage.clearForTesting()
       graft.queries.GraphStage.clearForTesting()
       SparkEntry.queries.map { case (name, fn) =>
-        name -> fn(spark, dir).collect().toSeq.map(_.toString)
+        name -> graft.operators.CheckpointBlocks.scoped(
+          fn(spark, dir).collect().toSeq.map(_.toString))
       }
     }
     try {

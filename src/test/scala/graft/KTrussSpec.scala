@@ -37,7 +37,7 @@ class KTrussSpec extends SparkSpec {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     val (fin, done) = KTruss.peel(
       stateOf(k4 ++ Seq((3L, 5L), (4L, 5L)), minSup = 2),
-      maxRounds = 8, retireSite = "spec.ktruss.dedup")
+      maxRounds = 8)
     assert(done)
     assert(survivors(fin) === k4.map { case (u, v) => (u, v, 2) }.toSet)
   }
@@ -49,7 +49,7 @@ class KTrussSpec extends SparkSpec {
     // loses both triangles (2→0) and dies in round 2 — empty truss.
     val (fin, done) = KTruss.peel(
       stateOf(Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)), minSup = 2),
-      maxRounds = 8, retireSite = "spec.ktruss.cascade")
+      maxRounds = 8)
     assert(done)
     assert(fin.isEmpty)
   }
@@ -68,7 +68,7 @@ class KTrussSpec extends SparkSpec {
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     val (fin, done) = KTruss.peel(
       stateOf(k4 ++ Seq((3L, 5L), (4L, 5L), (6L, 7L)), minSup = 2),
-      maxRounds = 8, retireSite = "spec.ktruss.mixed")
+      maxRounds = 8)
     assert(done)
     assert(survivors(fin) === k4.map { case (u, v) => (u, v, 2) }.toSet)
   }
@@ -77,7 +77,7 @@ class KTrussSpec extends SparkSpec {
     // K5: every edge sits in 3 triangles; min_sup=3 removes nothing
     val k5 = for { a <- 1L to 5L; b <- (a + 1) to 5L } yield (a, b)
     val (fin, done) = KTruss.peel(stateOf(k5.toSeq, minSup = 3),
-      maxRounds = 8, retireSite = "spec.ktruss.stable")
+      maxRounds = 8)
     assert(done)
     assert(survivors(fin) === k5.map { case (u, v) => (u, v, 3) }.toSet)
   }
@@ -85,18 +85,19 @@ class KTrussSpec extends SparkSpec {
   test("peel never frees the caller's staged-artifact blocks") {
     // q_ktruss hands peel a LAZY overlay on the staged support
     // artifact (a localCheckpoint — unrecomputable once unpersisted).
-    // The peel's spent-list free and site retire must only ever touch
-    // checkpoints the loop itself produced: freeing the overlay would
-    // walk its lineage into the artifact and destroy it session-wide.
+    // The peel's spent-list free and its scope's free must only ever
+    // touch checkpoints the loop itself produced: freeing the overlay
+    // would walk its lineage into the artifact and destroy it
+    // session-wide.
     val artifact = stateOf(
       Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)), minSup = 2)
       .localCheckpoint(true)
     def overlay = artifact.select(col("u"), col("v"), col("support"), col("min_sup"))
-    val (_, done1) = KTruss.peel(overlay, 8, "spec.ktruss.artifact")
+    val (_, done1) = KTruss.peel(overlay, 8)
     assert(done1)
-    // second invocation fires the retire site's previous-registration
-    // free path too
-    val (_, done2) = KTruss.peel(overlay, 8, "spec.ktruss.artifact")
+    // a second invocation, closed by its own scope, frees its rounds
+    // and final state
+    val (_, done2) = graft.operators.CheckpointBlocks.scoped(KTruss.peel(overlay, 8))
     assert(done2)
     assert(artifact.count() === 5) // artifact blocks intact, still readable
   }
@@ -108,7 +109,7 @@ class KTrussSpec extends SparkSpec {
     // as if it survived
     val (fin, done) = KTruss.peel(
       stateOf(Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)), minSup = 2),
-      maxRounds = 1, retireSite = "spec.ktruss.cap")
+      maxRounds = 1)
     assert(!done)
     assert(fin.where(col("support") < col("min_sup")).count() > 0)
   }
@@ -123,15 +124,13 @@ class KTrussSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (3L, 5L), (4L, 5L), (6L, 7L))
     val viaBroadcast = {
-      val (fin, done) = KTruss.peel(stateOf(edges, minSup = 2),
-        maxRounds = 8, retireSite = "spec.ktruss.layout.bc")
+      val (fin, done) = KTruss.peel(stateOf(edges, minSup = 2), maxRounds = 8)
       assert(done)
       survivors(fin)
     }
     withoutAutoBroadcast {
       val (fin, done) = KTruss.peel(stateOf(edges, minSup = 2),
-        maxRounds = 8, retireSite = "spec.ktruss.layout.nobc",
-        broadcastTrickle = false)
+        maxRounds = 8, broadcastTrickle = false)
       assert(done)
       assert(survivors(fin) === viaBroadcast)
     }

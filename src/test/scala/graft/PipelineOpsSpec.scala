@@ -354,48 +354,27 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("retire-managed query checkpoints reach a steady state across invocations") {
+    import graft.operators.CheckpointBlocks
     def persisted: Int = spark.sparkContext.getPersistentRDDs.size
-    // q_tfidf embeds one CheckpointBlocks.retire site: the first call
-    // registers a live block set, every later call frees the previous
-    // one. Without retire this grows +1 per invocation; the loose +2
-    // bound only absorbs other suites' concurrent persists (the
-    // SparkContext is shared), never a real per-invocation leak.
-    graft.queries.AdvancedQueries.q_tfidf(spark, sf).collect()
+    // q_tfidf embeds one scope-freed checkpoint: each invocation runs
+    // in its own scope, which frees it on close. Without the scope
+    // this grows +1 per invocation; the loose +2 bound only absorbs
+    // other suites' concurrent persists (the SparkContext is shared),
+    // never a real per-invocation leak.
+    CheckpointBlocks.scoped(graft.queries.AdvancedQueries.q_tfidf(spark, sf).collect())
     val after1 = persisted
-    (1 to 3).foreach(_ =>
-      graft.queries.AdvancedQueries.q_tfidf(spark, sf).collect())
+    (1 to 3).foreach(_ => CheckpointBlocks.scoped(
+      graft.queries.AdvancedQueries.q_tfidf(spark, sf).collect()))
     val after4 = persisted
-    assert(after4 - after1 <= 2, s"retire site leaked: $after1 -> $after4")
+    assert(after4 - after1 <= 2, s"scoped checkpoints leaked: $after1 -> $after4")
   }
 
-  test("retire: a cross-thread re-registration cannot free a live frame") {
-    import graft.operators.CheckpointBlocks
-    def hasLiveBlocks(df: org.apache.spark.sql.DataFrame): Boolean = {
-      def walk(r: org.apache.spark.rdd.RDD[_]): Boolean =
-        r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-          r.dependencies.exists(d => walk(d.rdd))
-      walk(df.queryExecution.toRdd)
-    }
-    val site = "spec.retire.concurrent"
-    // registrant thread A holds a live checkpointed frame at the site
-    val df1 = spark.range(100).toDF("v").localCheckpoint(true)
-    val t = new Thread(() => CheckpointBlocks.retire(site, df1))
-    t.start(); t.join()
-    // a DIFFERENT thread re-registering the same site must NOT free
-    // A's still-live blocks (a local checkpoint cannot recompute — a
-    // free here is an unrecoverable failure for A, not a cache miss)
-    val skipsBefore = CheckpointBlocks.concurrentSkips.get()
-    val df2 = spark.range(100).toDF("v").localCheckpoint(true)
-    CheckpointBlocks.retire(site, df2)
-    assert(CheckpointBlocks.concurrentSkips.get() == skipsBefore + 1)
-    assert(hasLiveBlocks(df1), "cross-thread retire freed a live frame")
-    assert(df1.count() == 100) // A's frame stays fully readable
-    // SAME-thread re-registration keeps the eager free (the serial
-    // Bench/Verify contract): df2's blocks go away
-    val df3 = spark.range(100).toDF("v").localCheckpoint(true)
-    CheckpointBlocks.retire(site, df3)
-    assert(!hasLiveBlocks(df2), "same-thread retire must free the prior frame")
-    CheckpointBlocks.free(df3) // leave no blocks behind for other suites
+  test("q_tfidf built twice over one dir: the first plan still executes") {
+    val first = graft.queries.AdvancedQueries.q_tfidf(spark, sf)
+    val second = graft.queries.AdvancedQueries.q_tfidf(spark, sf)
+    val a = rowsOf(first)
+    assert(a.nonEmpty)
+    assert(a == rowsOf(second))
   }
 
   test("retire: operator sites are keyed by their input, so two built frames both execute") {
@@ -411,16 +390,12 @@ class PipelineOpsSpec extends SparkSpec {
     val expectA = pairs(TextOps.ngramJaccardPairs(docsA, 3, 0.5))
     val expectB = pairs(TextOps.ngramJaccardPairs(docsB, 3, 0.5))
     assert(expectA == Set((0L, 1L)) && expectB == Set((10L, 11L)))
-    // both built before either executes: under one shared site key,
-    // building B's shingle checkpoint freed A's live blocks
+    // both built before either executes: building B's shingle
+    // checkpoint must not free A's live blocks
     val a = TextOps.ngramJaccardPairs(docsA, 3, 0.5)
     val b = TextOps.ngramJaccardPairs(docsB, 3, 0.5)
     assert(pairs(a) == expectA)
     assert(pairs(b) == expectB)
-    // the key is stable across re-reads of one snapshot, so serial
-    // reruns over it still free their predecessor
-    assert(CheckpointBlocks.fingerprint(graft.io.Tables.table(spark, sf, "documents")) ==
-      CheckpointBlocks.fingerprint(graft.io.Tables.table(spark, sf, "documents")))
     CheckpointBlocks.free(Seq(a, b))
   }
 

@@ -100,7 +100,8 @@ class ScalingProbeSpec extends SparkSpec {
     val failures = miningFailures ++ stageFailures ++ heavyweights.flatMap { name =>
       def minOf2(dir: String): Double = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        Bench.execute(SparkEntry.queries(name)(spark, dir))
+        graft.operators.CheckpointBlocks.scoped(
+          Bench.execute(SparkEntry.queries(name)(spark, dir)))
         (System.nanoTime() - t0) / 1e9
       }.min
       val ts = minOf2(small)
@@ -179,7 +180,8 @@ class ScalingProbeSpec extends SparkSpec {
     val failures = stageFailures ++ decadeHeavyweights.flatMap { name =>
       def minOf2(dir: String): Double = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        Bench.execute(SparkEntry.queries(name)(spark, dir))
+        graft.operators.CheckpointBlocks.scoped(
+          Bench.execute(SparkEntry.queries(name)(spark, dir)))
         (System.nanoTime() - t0) / 1e9
       }.min
       val ts = minOf2(big)

@@ -1,19 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
   * Spark session startup dominates test time otherwise). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.localSession(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -21,6 +16,11 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Each test is one checkpoint scope: the query checkpoints it
+    * builds are freed when it ends. */
+  override def withFixture(test: NoArgTest): Outcome =
+    graft.operators.CheckpointBlocks.scoped(super.withFixture(test))
   import scala.jdk.CollectionConverters._
 
   def rowsOf(df: DataFrame): Seq[Seq[Any]] =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,11 +16,7 @@ object TopKMicrobench {
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(20000000L)
     val nGroups = args.drop(1).headOption.map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-      .config("spark.sql.shuffle.partitions", Runtime.getRuntime.availableProcessors())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(Runtime.getRuntime.availableProcessors())
     spark.sparkContext.setLogLevel("ERROR")
 
     val df = spark.range(nRows)
