@@ -137,7 +137,11 @@ object DailyEtl {
 
   /** One daily run, fetcher-injected (specs pass [[Sources
     * .FileFetcher]]; [[main]] wires HTTP/file dispatch). Returns the
-    * [[Load.LoadResult]] so callers can inspect the RETURNING sets. */
+    * [[Load.LoadResult]] so callers can inspect the RETURNING sets.
+    * Its frames read the load's checkpoints, which belong to the
+    * caller's innermost open [[graft.operators.CheckpointBlocks.scoped]]
+    * block (Spark's ContextCleaner reclaims them when none is open):
+    * `run` opens no scope of its own, so the result stays readable. */
   def run(spark: SparkSession, fetcher: Sources.Fetcher, cfg: Config,
       bearerToken: Option[String] = None,
       backend: TableFormat.Backend = TableFormat.DefaultBackend): Load.LoadResult = {
@@ -169,23 +173,27 @@ object DailyEtl {
           s"tracks source '$url' did not return JSON")
       }
     }.toSeq
+    // the day's topN docs fit one partition: the load's dedup windows
+    // and aggregates over them then need no exchange
     val docs = Sources.songDocsFromTracksJson(
-      responses.toDF("batch_id", "body"), batchSize = cfg.batchSize)
-    // the abort contract covers BOTH fetch stages: a tracks response
-    // that silently dropped an id (under-full is legal per batch —
-    // only OVER-full raises in the parser) must abort the run, not
-    // load a short day
-    val nDocs = docs.count()
-    if (nDocs != cfg.topN)
-      throw new SongDataNotFoundError(
-        s"Ranking data is missing: track lookup returned $nDocs of ${cfg.topN} songs.")
+      responses.toDF("batch_id", "body"), batchSize = cfg.batchSize).coalesce(1)
 
     // 3. FK-ordered load over the committed state; the parquet commit
     //    IS the between-days checkpoint (no in-memory lineage survives
-    //    a day boundary — PipelineE2ESpec's chained-plan lesson)
+    //    a day boundary — PipelineE2ESpec's chained-plan lesson).
+    //    loadBatch executes each stage once and commits nothing, so
+    //    everything below reads its checkpoints
     val fmt = backend(spark, cfg.storeRoot)
     val (db, manifestBase, pinned) = loadDb(spark, fmt)
     val res = Load.loadBatch(db, docs, java.sql.Date.valueOf(cfg.date))
+    // the abort contract covers BOTH fetch stages: a tracks response
+    // that silently dropped an id (under-full is legal per batch —
+    // only OVER-full raises in the parser) must abort the run before
+    // anything commits, not load a short day
+    val nDocs = res.docs.count()
+    if (nDocs != cfg.topN)
+      throw new SongDataNotFoundError(
+        s"Ranking data is missing: track lookup returned $nDocs of ${cfg.topN} songs.")
     // X5 fires iff the PINNED fact table already holds rows at or
     // past the horizon (today's inserts can't be a year old) — the
     // same predicate Maintenance.retention applies. The range read

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.MusicCsv.keepBestRow
 import graft.model.Music.MusicDb
+import graft.operators.CheckpointBlocks.local
 
 /** The load layer: every `INSERT … ON CONFLICT DO NOTHING RETURNING`
   * of the reference (S9, `etl_pipeline.py:594-612,699-728,768-786,
@@ -27,6 +28,15 @@ import graft.model.Music.MusicDb
   * the existing table per constraint. With a sorted/bucketed store
   * these collapse further; with a transactional table format this
   * whole object is `MERGE WHEN NOT MATCHED`.
+  *
+  * One execution per stage: the reference computes each RETURNING set
+  * once per statement and appends exactly those rows to its CSVs.
+  * [[upsert]] and [[updateColumn]] stay lazy (query plans are built
+  * from them), but [[loadBatch]] runs every stage exactly once through
+  * [[graft.operators.CheckpointBlocks.local]], so the commits and CSV
+  * sinks downstream read checkpoints and parquet scans instead of
+  * re-running the parse, the dedup windows and the anti-join chains
+  * once per consumer.
   */
 object Load {
 
@@ -88,7 +98,12 @@ object Load {
     * so such updates are SKIPPED instead (the engine-wide
     * conflict-skip discipline `upsert` applies to inserts; documented
     * deviation: skip-and-continue where the reference would error). */
-  def updateColumn(base: DataFrame, updates: DataFrame, key: String, valueCol: String): (DataFrame, DataFrame) = {
+  def updateColumn(base: DataFrame, updates: DataFrame, key: String, valueCol: String): (DataFrame, DataFrame) =
+    returningAndState(filled(base, updates, key, valueCol), base.columns)
+
+  /** [[updateColumn]]'s fill join: `base` with the filled `valueCol`
+    * and a `__hit` flag on the rows the fill changed. */
+  private def filled(base: DataFrame, updates: DataFrame, key: String, valueCol: String): DataFrame = {
     val u = updates.select(col(key), col(valueCol).as("__new_val"))
       .where(col("__new_val").isNotNull)
       .transform(keepBestRow(_, Seq(key), Seq(col("__new_val").asc)))
@@ -98,14 +113,16 @@ object Load {
       .join(base.select(col(valueCol).as("__new_val"))
         .where(col("__new_val").isNotNull), Seq("__new_val"), "left_anti")
       .transform(keepBestRow(_, Seq("__new_val"), Seq(col(key).asc)))
-    val joined = base.join(u, Seq(key), "left")
-    val applied = joined
+    base.join(u, Seq(key), "left")
       .withColumn("__hit", col(valueCol).isNull && col("__new_val").isNotNull)
       .withColumn(valueCol,
         when(col("__hit"), col("__new_val")).otherwise(col(valueCol)))
-    val newBase = applied.select(base.columns.map(col).toSeq: _*)
-    val returning = applied.where(col("__hit")).select(base.columns.map(col).toSeq: _*)
-    (returning, newBase)
+  }
+
+  /** (RETURNING set, new state) of a [[filled]] frame. */
+  private def returningAndState(applied: DataFrame, cols: Seq[String]): (DataFrame, DataFrame) = {
+    val keep = cols.map(col)
+    (applied.where(col("__hit")).select(keep: _*), applied.select(keep: _*))
   }
 
   /** Result of one daily batch load: the new state plus the four
@@ -113,18 +130,34 @@ object Load {
     * S11) and the S10 fill RETURNING set (`updatedSongs` — songs
     * already present that gained an apple_music_url this batch; also
     * how [[graft.DailyEtl]] knows a day is NOT pure-append and must
-    * commit the song table as a rewrite). */
+    * commit the song table as a rewrite). `docs` is the batch as
+    * loaded. Every frame reads [[loadBatch]]'s checkpoints. */
   final case class LoadResult(
       db: MusicDb,
       insertedArtists: DataFrame,
       insertedSongs: DataFrame,
       updatedSongs: DataFrame,
       insertedMaps: DataFrame,
-      insertedRankings: DataFrame)
+      insertedRankings: DataFrame,
+      docs: DataFrame)
 
   /** Full daily load (reference `main()` stages 1-2,
     * `etl_pipeline.py:1003-1022`): dims first, then bridge + fact —
     * the FK dependency barrier becomes plain sequential job ordering.
+    *
+    * Each stage executes exactly once, here: `docs` at entry, every
+    * upsert's RETURNING set (the new state is `existing ∪ inserted`),
+    * the S10 fill (one checkpoint feeds both `updatedSongs` and the
+    * new song state) and the retention cascade's key sets
+    * ([[Maintenance.retention]]) are
+    * [[graft.operators.CheckpointBlocks.local]] checkpoints. A batch
+    * that carries no apple_music_url skips the fill, and a day with no
+    * aged ranking skips the cascade. So every frame of the result is a
+    * shallow plan over those checkpoints and the `db` scans, however
+    * many times it is read. The checkpoints belong to the caller's
+    * innermost open scope (unscoped, Spark's ContextCleaner reclaims
+    * them once the result is unreachable): the result stays readable
+    * until that scope closes.
     *
     * @param docs normalized song docs with (source, position) carried
     *             explicitly from ingestion (see [[Normalize]]).
@@ -133,35 +166,40 @@ object Load {
     *              reproducible backfills).
     */
   def loadBatch(db: MusicDb, docs: DataFrame, today: java.sql.Date): LoadResult = {
+    val batch = local(docs)
     val pos = Seq(col("source").asc, col("position").asc)
 
-    val artists = Normalize.artists(docs)
-    val (insArtist, newArtist) =
-      upsert(db.artist, artists, Seq(Seq("artist_id")), Seq(col("artist_name").asc))
+    val (insArtist, newArtist) = upsertOnce(db.artist, Normalize.artists(batch),
+      Seq(Seq("artist_id")), Seq(Normalize.artistPriority))
 
     // keep (source, position) through the within-batch dedup; upsert
     // projects to the table schema only after ordering by them
-    val songs = docs.select(
+    val songs = batch.select(
       (db.song.columns.map(col) ++ Seq(col("source"), col("position"))).toSeq: _*)
-    val (insSong, newSong0) = upsert(
+    val (insSong, newSong0) = upsertOnce(
       db.song, songs,
       Seq(Seq("isrc"), Seq("spotify_url"), Seq("apple_music_url")),
       pos)
     // songs already present keep their row but may gain an
-    // apple_music_url they lacked (S10 enrich path)
-    val (updSong, newSong) = updateAppleMusicUrls(
-      newSong0, docs.select(col("isrc"), col("apple_music_url")))
+    // apple_music_url they lacked (S10 enrich path); a batch that
+    // carries no url fills nothing
+    val urls = batch.select(col("isrc"), col("apple_music_url"))
+      .where(col("apple_music_url").isNotNull)
+    val (updSong, newSong) =
+      if (urls.isEmpty) (newSong0.limit(0), newSong0)
+      else returningAndState(
+        local(filled(newSong0, urls, "isrc", "apple_music_url")
+          .select((db.song.columns :+ "__hit").map(col).toSeq: _*)),
+        db.song.columns)
 
-    val maps = Normalize.artistSongMaps(docs)
-    val (insMap, newMap) =
-      upsert(db.artistSongMap, maps, Seq(Seq("artist_id", "isrc")), Seq(col("artist_id").asc))
+    val (insMap, newMap) = upsertOnce(db.artistSongMap, Normalize.artistSongMaps(batch),
+      Seq(Seq("artist_id", "isrc")), Seq(col("artist_id").asc))
 
-    val rankings = Normalize.rankings(docs, today)
     // rank is 1:1 with position within each source, so (source, rank)
     // reproduces the reference's insert order without re-carrying the
     // ingestion columns through the W2 window
-    val (insRank, newRank) = upsert(
-      db.ranking, rankings,
+    val (insRank, newRank) = upsertOnce(
+      db.ranking, Normalize.rankings(batch, today),
       Seq(Seq("isrc", "ranking_date", "ranking_source"),
         Seq("ranking_date", "rank", "ranking_source")),
       Seq(col("ranking_source").asc, col("rank").asc))
@@ -170,7 +208,15 @@ object Load {
     val retained = Maintenance.retention(
       MusicDb(newArtist, newSong, newMap, newRank), today)
 
-    LoadResult(retained, insArtist, insSong, updSong, insMap, insRank)
+    LoadResult(retained, insArtist, insSong, updSong, insMap, insRank, batch)
+  }
+
+  /** [[upsert]] executed once: (the checkpointed RETURNING set,
+    * `existing ∪` it). */
+  private[etl] def upsertOnce(existing: DataFrame, batch: DataFrame,
+      constraints: Seq[Seq[String]], priority: Seq[Column]): (DataFrame, DataFrame) = {
+    val inserted = local(upsert(existing, batch, constraints, priority)._1)
+    (inserted, existing.unionByName(inserted))
   }
 
   /** S11 CSV append sink: quoted values, NULL = empty unquoted field,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Music.MusicDb
+import graft.operators.CheckpointBlocks
 
 /** The reference's trigger graph as explicit batch stages (SURVEY.md
   * §2.10 X3-X5): triggers have no Spark analog, so per-row trigger
@@ -31,34 +32,50 @@ object Maintenance {
     * delete rankings with `ranking_date <= D - INTERVAL '1 year'`,
     * then run the delete-cascade GC. At scale the fact table is
     * partitioned by ranking_date, so this is a partition drop, not a
-    * rewrite. */
+    * rewrite. The kept rankings are the complementary filter, which
+    * is what [[deleteRankings]]' `exceptAll` leaves when the delete
+    * set is a filter of the table itself. A day with nothing aged
+    * deletes nothing, so it returns `db` without running the cascade. */
   def retention(db: MusicDb, newDate: Date): MusicDb = {
-    val cutoff = add_months(lit(newDate), -12)
-    val deleted = db.ranking.where(col("ranking_date") <= cutoff)
-    deleteRankings(db, deleted)
+    val aged = coalesce(col("ranking_date") <= add_months(lit(newDate), -12), lit(false))
+    val deleted = db.ranking.where(aged)
+    if (deleted.isEmpty) db
+    else cascade(db, deleted, db.ranking.where(!aged))
   }
 
   /** Apply a ranking delete-set plus the full trigger cascade. */
-  def deleteRankings(db: MusicDb, deleted: DataFrame): MusicDb = {
+  def deleteRankings(db: MusicDb, deleted: DataFrame): MusicDb =
+    cascade(db, deleted, db.ranking.exceptAll(deleted))
+
+  /** The trigger cascade of a ranking delete, given the delete set and
+    * the rankings it leaves. The two gone-key sets are executed once
+    * each ([[CheckpointBlocks.local]]), so every returned table is a
+    * shallow anti-join against a checkpoint. */
+  private def cascade(db: MusicDb, deleted: DataFrame, ranking: DataFrame): MusicDb = {
     val deletedKeys = deleted.select("isrc").distinct()
-    val ranking = db.ranking.exceptAll(deleted)
 
     // X4: touched songs with no remaining ranking rows
-    val songsGone = deletedKeys
-      .join(ranking.select("isrc").distinct(), Seq("isrc"), "left_anti")
-    val song = db.song.join(songsGone, Seq("isrc"), "left_anti")
+    val songsGone = CheckpointBlocks.local(deletedKeys
+      .join(ranking.select("isrc").distinct(), Seq("isrc"), "left_anti"))
+    val song = without(db.song, songsGone, "isrc")
 
     // FK ON DELETE CASCADE: bridge rows of deleted songs
     val mapsGone = db.artistSongMap.join(songsGone, Seq("isrc"), "left_semi")
-    val artistSongMap = db.artistSongMap.join(songsGone, Seq("isrc"), "left_anti")
+    val artistSongMap = without(db.artistSongMap, songsGone, "isrc")
 
     // X3: touched artists with no remaining bridge rows
-    val artistsGone = mapsGone.select("artist_id").distinct()
-      .join(artistSongMap.select("artist_id").distinct(), Seq("artist_id"), "left_anti")
-    val artist = db.artist.join(artistsGone, Seq("artist_id"), "left_anti")
+    val artistsGone = CheckpointBlocks.local(mapsGone.select("artist_id").distinct()
+      .join(artistSongMap.select("artist_id").distinct(), Seq("artist_id"), "left_anti"))
+    val artist = without(db.artist, artistsGone, "artist_id")
 
     MusicDb(artist, song, artistSongMap, ranking)
   }
+
+  /** `table`'s rows whose `key` is not in `gone`, in `table`'s column
+    * order (a USING anti-join moves the key first, and a rewrite
+    * commits whatever order it is given). */
+  private def without(table: DataFrame, gone: DataFrame, key: String): DataFrame =
+    table.join(gone, Seq(key), "left_anti").select(table.columns.map(col).toSeq: _*)
 
   /** Constraint audit (SURVEY.md §1.4): the DDL's PK/UNIQUE/CHECK
     * rules as a validation report — violation counts per rule, for

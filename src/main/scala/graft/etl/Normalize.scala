@@ -2,7 +2,7 @@ package graft.etl
 
 import java.sql.Date
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -19,13 +19,20 @@ import org.apache.spark.sql.functions._
   */
 object Normalize {
 
+  /** Which name an artist keeps when one batch carries it under
+    * several: the least, and a NULL name only when no row has one. */
+  val artistPriority: Column = col("artist_name").asc_nulls_last
+
   /** F13: explode the nested artist array; dedup across songs that
-    * share an artist. */
+    * share an artist, keeping the [[artistPriority]] name. A hash
+    * aggregate, not a window: `min` skips NULLs, which is exactly
+    * that priority. */
   def artists(docs: DataFrame): DataFrame =
     docs
       .select(explode(col("artists")).as("a"))
       .select(col("a.artist_id"), col("a.artist_name"))
-      .dropDuplicates("artist_id")
+      .groupBy("artist_id")
+      .agg(min("artist_name").as("artist_name"))
 
   def songs(docs: DataFrame): DataFrame =
     docs.select(

@@ -137,12 +137,11 @@ trait TableFormat {
     val base = currentVersion(table)
     require(base > 0, s"table $table does not exist")
     val existing = readVersion(table, base)
-    val (inserted0, _) = Load.upsert(existing, batch, constraints, priority)
-    // materialize the RETURNING set ONCE: without it the anti-join
-    // chain over the full table runs three times (empty guard, the
-    // commit's recompute of existing∪inserted, the caller's action on
-    // the returned frame)
-    val inserted = graft.operators.CheckpointBlocks.local(inserted0)
+    // the RETURNING set executes ONCE: without it the anti-join chain
+    // over the full table runs three times (empty guard, the commit's
+    // recompute of existing∪inserted, the caller's action on the
+    // returned frame)
+    val (inserted, _) = Load.upsertOnce(existing, batch, constraints, priority)
     if (inserted.isEmpty) inserted
     // the merged state IS existing ∪ inserted — commit it as an
     // APPEND of the survivors onto the version the anti-joins saw,

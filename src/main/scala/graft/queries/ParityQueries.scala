@@ -321,8 +321,9 @@ object ParityQueries {
   /** F13 explode-normalize, oracle-gated: [[graft.etl.Normalize.artists]]
     * (explode the nested artist array, dedup across docs sharing an
     * artist — reference `etl_pipeline.py` nested-artists handling)
-    * over a lineitem-derived nest. artist_name is a pure function of
-    * artist_id, so the dedup's keep-any choice is value-deterministic.
+    * over a lineitem-derived nest. The dedup keeps each id's least
+    * name (the load's priority); here artist_name is a pure function
+    * of artist_id, so every choice agrees with the oracle's DISTINCT.
     *
     * Scale: the nest build is one partial-agg'd groupBy; explode is
     * map-side; the dedup is a hash aggregate on the exploded key. */

@@ -221,22 +221,66 @@ class DailyEtlSpec extends SparkSpec {
     assert(newSongs.select("isrc").as[String].collect().toSeq == Seq("ISRCt99"))
   }
 
+  /** Each table with its DDL column order, the order its CSV sink
+    * writes. */
+  private val tables = Seq(
+    "artist" -> graft.model.Music.artistSchema, "song" -> graft.model.Music.songSchema,
+    "artist_song_map" -> graft.model.Music.artistSongMapSchema,
+    "ranking" -> graft.model.Music.rankingSchema)
+
+  private def csvParts(csv: String, table: String): Set[java.io.File] =
+    Option(new java.io.File(s"$csv/$table.csv").listFiles()).toSet.flatten
+      .filter(_.getName.startsWith("part-"))
+
+  /** Runs `day`, checks each table's CSV sink against the store and
+    * returns the day's result. The rows the day appended to a CSV are
+    * exactly the rows of the newly pinned version that the previous
+    * pin lacks. (The song table's equality needs a day with no S10
+    * fill, whose updated rows change the store but are not CSV
+    * inserts; these charts never fill.) */
+  private def assertSinksMatchStore[T](store: String, csv: String)(day: => T): T = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val fmt = graft.etl.TableFormat.DefaultBackend(spark, store)
+    val manifest = new graft.etl.ManifestStore(spark, fmt, tables.map(_._1))
+    val before = manifest.pinned(manifest.base)
+    val partsBefore = tables.map { case (t, _) => t -> csvParts(csv, t) }.toMap
+    val result = day
+    val after = manifest.pinned(manifest.base)
+    tables.foreach { case (t, schema) =>
+      def pinned(pins: Map[String, Long]) =
+        manifest.readPinned(pins, t).select(schema.fieldNames.toSeq.map(col): _*)
+      val added = pinned(after).exceptAll(pinned(before))
+        .collect().map(_.mkString("|")).toSeq.sorted
+      val fresh = (csvParts(csv, t) -- partsBefore(t)).toSeq.map(_.getPath)
+      val cols = (if (t == "ranking") Seq("ranking_id") else Nil) ++ schema.fieldNames
+      val appended =
+        if (fresh.isEmpty) Nil
+        else spark.read.schema(StructType(cols.map(StructField(_, StringType))))
+          .csv(fresh: _*).drop("ranking_id")
+          .collect().map(_.mkString("|")).toSeq.sorted
+      assert(appended == added, s"$t: CSV appended $appended, store added $added")
+    }
+    result
+  }
+
   test("a retention day rewrites: year-old rankings drop through the X5 cascade, the store stays consistent") {
     val dir = Files.createTempDirectory("dailyetl_retention")
     val store = s"$dir/store"
+    val csv = s"$dir/csv"
     val fetcher = new Sources.FileFetcher(Map.empty)
     val ids1 = (1 to 10).map(i => s"t$i")
     def cfg(n: Int, date: LocalDate, idsN: Seq[String]) = DailyEtl.Config(
       store, date,
       write(java.nio.file.Paths.get(s"$dir/p$n.html"), playlistHtml(idsN)),
       write(java.nio.file.Paths.get(s"$dir/t$n.json"), tracksJson(idsN)),
-      s"$dir/README.md", None)
+      s"$dir/README.md", Some(csv))
     DailyEtl.run(spark, fetcher, cfg(1, LocalDate.of(2025, 1, 1), ids1))
     // 13 months later: the same chart again — day-1 rankings are past
     // the horizon; the songs survive (they rank today), so only the
     // fact rows age out
-    val r2 = DailyEtl.run(spark, fetcher,
-      cfg(2, LocalDate.of(2026, 2, 1), ids1))
+    val r2 = assertSinksMatchStore(store, csv)(
+      DailyEtl.run(spark, fetcher, cfg(2, LocalDate.of(2026, 2, 1), ids1)))
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val fmt = graft.etl.TableFormat.DefaultBackend(spark, store)
@@ -246,8 +290,8 @@ class DailyEtlSpec extends SparkSpec {
       "the year-old rankings must be retired by the retention stage")
     assert(fmt.read("song").count() == 10 && r2.insertedSongs.isEmpty)
     // a third, ordinary day on the rewritten store appends again
-    val r3 = DailyEtl.run(spark, fetcher,
-      cfg(3, LocalDate.of(2026, 2, 2), ids1.drop(1) :+ "t99"))
+    val r3 = assertSinksMatchStore(store, csv)(
+      DailyEtl.run(spark, fetcher, cfg(3, LocalDate.of(2026, 2, 2), ids1.drop(1) :+ "t99")))
     assert(r3.insertedSongs.count() == 1)
     assert(fmt.read("ranking").count() == 20)
   }

@@ -141,6 +141,19 @@ class LoadSpec extends SparkSpec {
     assert(r.toSeq == Seq(("I3", 1, "Apple Music"), ("I1", 1, "Spotify"), ("I2", 2, "Spotify")))
   }
 
+  test("artist dedup keeps the same name whichever order the batch lists it in (F13)") {
+    // A1 arrives under two names, A2 once named and once unnamed: the
+    // least name wins, and a real name beats a NULL one
+    val rows = Seq(
+      ("I1", Seq(Artist("A1", "Anne"), Artist("A2", null))),
+      ("I2", Seq(Artist("A1", "Ann"), Artist("A2", "Cy"))))
+    def names(order: Seq[(String, Seq[Artist])]): Seq[(String, String)] =
+      Normalize.artists(order.toDF("isrc", "artists")).orderBy("artist_id")
+        .as[(String, String)].collect().toSeq
+    assert(names(rows) == Seq(("A1", "Ann"), ("A2", "Cy")))
+    assert(names(rows.reverse) == Seq(("A1", "Ann"), ("A2", "Cy")))
+  }
+
   test("loadBatch end-to-end: dims then fact, RETURNING sets, retention fires (X5)") {
     val artistType = org.apache.spark.sql.Encoders.product[Artist].schema
     val docs = Seq(
