@@ -144,7 +144,7 @@ object GraftFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.TopKThroughWindowRule)
+    graft.plans.TopK.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
     GraftFunctions.all.foreach(ext.injectFunction)
   }
 }

@@ -222,7 +222,11 @@ object TopKThroughWindowRule extends Rule[LogicalPlan] {
   * within groups for deterministic results (same caveat as
   * row_number). */
 object TopK {
-  /** Idempotently installs the strategy + rewrite rule on a session
+  /** The engine's optimizer rules, read by both registration paths
+    * ([[install]] and [[graft.functions.GraftExtensions]]). */
+  val optimizerRules: Seq[Rule[LogicalPlan]] = Seq(TopKThroughWindowRule, SmallSortRule)
+
+  /** Idempotently installs the strategy + optimizer rules on a session
     * built without [[graft.functions.GraftExtensions]]. */
   // synchronized: check-then-append on the experimental lists is a
   // race under concurrent staged-artifact builds (Bench's prewarm
@@ -231,8 +235,9 @@ object TopK {
   def install(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(GraftStrategy))
       spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ GraftStrategy
-    if (!spark.experimental.extraOptimizations.contains(TopKThroughWindowRule))
-      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ TopKThroughWindowRule
+    val missing = optimizerRules.filterNot(spark.experimental.extraOptimizations.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations ++ missing
   }
 
   def perGroup(

@@ -5,11 +5,15 @@ import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
-  * Spark session startup dominates test time otherwise). */
+  * Spark session startup dominates test time otherwise). The engine's
+  * planner strategy and optimizer rules are installed when it is
+  * built, so a suite's plans do not depend on whether an earlier suite
+  * opened a table through `Tables`. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkEntry.localSession(4)
     s.sparkContext.setLogLevel("WARN")
+    graft.plans.TopK.install(s)
     s
   }
 }

@@ -55,7 +55,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("rewrite rule: window row_number filter plans as TopKPerGroupExec") {
-    graft.plans.TopK.install(spark)
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
     val df = orders.select("o_custkey", "o_orderkey", "o_totalprice")
@@ -71,7 +70,6 @@ class TopKPerGroupSpec extends SparkSpec {
   }
 
   test("rewrite rule leaves global (unpartitioned) and non-row_number windows alone") {
-    graft.plans.TopK.install(spark)
     val global = orders.withColumn("rn",
       row_number().over(Window.orderBy(col("o_orderkey").asc)))
       .where(col("rn") <= 5)
