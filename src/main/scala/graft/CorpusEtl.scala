@@ -47,14 +47,13 @@ import graft.text.Curation
   * manifest pins exactly the versions this run's commits RETURNED,
   * and a concurrent second run fails its manifest commit LOUDLY.
   *
-  * STORAGE COST NOW MATCHES THE COMPUTE COST: the default backend is
+  * STORAGE COST MATCHES THE COMPUTE COST: the store is
   * [[graft.etl.ManifestParquet]], whose append commit writes only the
   * batch's files — so the three append-per-batch tables cost O(batch)
-  * bytes per day, completing the story where the versioned-parquet
-  * backend paid O(history) per commit (round-9 verdict's one scale
-  * caveat). [[forget]] and a backfill's full rewrites still rewrite —
-  * that is what they mean; periodic [[ManifestParquet.compact]] is
-  * the matching small-file maintenance.
+  * bytes per day, and [[forget]] commits O(forget-set) tombstones. A
+  * backfill's full rewrite still rewrites — that is what it means;
+  * periodic [[ManifestParquet.compact]] is the matching small-file
+  * maintenance.
   */
 object CorpusEtl {
 
@@ -73,14 +72,6 @@ object CorpusEtl {
     * here is automatically pinned and registered. */
   private[graft] val allTables = "eval_shingles" +: appendTables
 
-  /** The storage backend a store root resolves to — the seam-wide
-    * default ([[graft.etl.TableFormat.DefaultBackend]], the
-    * manifest-log backend with O(batch) appends); CorpusEtlSpec also
-    * runs the fold through [[graft.etl.VersionedParquet]] to prove
-    * the pipeline is backend-agnostic above the seam. */
-  type Backend = TableFormat.Backend
-  val DefaultBackend: Backend = TableFormat.DefaultBackend
-
   private def storeOf(spark: SparkSession, fmt: TableFormat) =
     new ManifestStore(spark, fmt, allTables)
 
@@ -95,7 +86,7 @@ object CorpusEtl {
   /** Pin the benchmark and commit the day-0 empty state. */
   def init(spark: SparkSession, storeRoot: String, evalDocs: DataFrame,
       cfg: Curation.Config = Curation.Config(),
-      backend: Backend = DefaultBackend): Unit = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Unit = {
     val fmt = backend(spark, storeRoot)
     val store = storeOf(spark, fmt)
     require(store.base == 0, s"store at $storeRoot is already initialized")
@@ -122,7 +113,7 @@ object CorpusEtl {
     * in the ledger and double-count the audit. */
   def runBatch(spark: SparkSession, storeRoot: String, batch: DataFrame,
       batchId: Long, cfg: Curation.Config = Curation.Config(),
-      backend: Backend = DefaultBackend): Audit = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Audit = {
     val fmt = backend(spark, storeRoot)
     val store = storeOf(spark, fmt)
     val base = store.base
@@ -200,7 +191,7 @@ object CorpusEtl {
     * docs were deliberately forgotten (re-folding would resurrect
     * them). Scan fallback covers stats-less backends. */
   def lastBatchId(spark: SparkSession, storeRoot: String,
-      backend: Backend = DefaultBackend): Long = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Long = {
     val fmt = backend(spark, storeRoot)
     val store = storeOf(spark, fmt)
     val base = store.base
@@ -223,7 +214,7 @@ object CorpusEtl {
     * not this read path. */
   def tablesAsOf(spark: SparkSession, storeRoot: String,
       manifestVersion: Long,
-      backend: Backend = DefaultBackend): Map[String, DataFrame] =
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Map[String, DataFrame] =
     storeOf(spark, backend(spark, storeRoot)).tablesAsOf(manifestVersion)
 
   /** The store's CDC feed since manifest `sinceManifest` (0 = since
@@ -237,7 +228,8 @@ object CorpusEtl {
     * erasures stream through; compaction is invisible; a true rewrite
     * fails loudly rather than feed a wrong delta). */
   def changesSince(spark: SparkSession, storeRoot: String, sinceManifest: Long,
-      backend: Backend = DefaultBackend): (Long, Map[String, graft.etl.ChangeSet]) = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend)
+      : (Long, Map[String, graft.etl.ChangeSet]) = {
     val store = storeOf(spark, backend(spark, storeRoot))
     val b = store.base
     require(b > 0, "store has no manifest — run `CorpusEtl init` first")
@@ -247,7 +239,7 @@ object CorpusEtl {
   /** The accepted-documents slice of [[changesSince]] — the daily
     * training-set feed. */
   def keptSince(spark: SparkSession, storeRoot: String, sinceManifest: Long,
-      backend: Backend = DefaultBackend): (Long, graft.etl.ChangeSet) = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): (Long, graft.etl.ChangeSet) = {
     val (asOf, ch) = changesSince(spark, storeRoot, sinceManifest, backend)
     (asOf, ch("corpus_kept"))
   }
@@ -267,10 +259,9 @@ object CorpusEtl {
     * winner); (3) FUTURE arrivals of the forgotten content are judged
     * fresh — the probe rows are gone, which is exactly what erasure
     * means. Scale: the erasure rides [[graft.etl.TableFormat
-    * .tryDeleteRows]] — on the default manifest-log backend that is a
-    * DELETION-VECTOR commit writing O(forget-set) bytes per table
-    * (the key set plus a tombstone manifest line; never a history
-    * rewrite), on versioned-parquet it is the anti-join rewrite.
+    * .tryDeleteRows]] — a DELETION-VECTOR commit writing
+    * O(forget-set) bytes per table (the key set plus a tombstone
+    * manifest line; never a history rewrite).
     * Logical first, physical on maintenance cadence: [[compactStore]]
     * materializes the tombstones and [[vacuumStore]] removes the
     * pre-forget versions' bytes from disk (CorpusEtlSpec's
@@ -285,7 +276,7 @@ object CorpusEtl {
     *   serving the forgotten rows until someone happened to rebuild
     *   it (CorpusEtlSpec's resolve-after-forget case). */
   def forget(spark: SparkSession, storeRoot: String, docIds: DataFrame,
-      backend: Backend = DefaultBackend,
+      backend: TableFormat.Backend = TableFormat.DefaultBackend,
       invalidateSnapshots: Seq[String] = Nil): Unit = {
     val fmt = backend(spark, storeRoot)
     val store = storeOf(spark, fmt)
@@ -325,7 +316,7 @@ object CorpusEtl {
     * CLI does when given `--compact-every`. */
   def maintainOnCadence(spark: SparkSession, storeRoot: String,
       batchId: Long, policy: MaintenancePolicy,
-      backend: Backend = DefaultBackend): Boolean =
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Boolean =
     if (batchId % policy.compactEvery != 0) false
     else {
       compactStore(spark, storeRoot, backend)
@@ -342,7 +333,7 @@ object CorpusEtl {
     * a manifest pinning the compacted versions. Pinned readers of
     * older manifests are untouched. */
   def compactStore(spark: SparkSession, storeRoot: String,
-      backend: Backend = DefaultBackend): Unit = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Unit = {
     val fmt = backend(spark, storeRoot) match {
       case m: ManifestParquet => m
       case other => throw new UnsupportedOperationException(
@@ -360,7 +351,8 @@ object CorpusEtl {
     * (see [[forget]]). Returns per-table reclamation stats. */
   def vacuumStore(spark: SparkSession, storeRoot: String,
       retainManifest: Long, olderThanMs: Long = 0L,
-      backend: Backend = DefaultBackend): Map[String, graft.etl.VacuumStats] =
+      backend: TableFormat.Backend = TableFormat.DefaultBackend)
+      : Map[String, graft.etl.VacuumStats] =
     storeOf(spark, backend(spark, storeRoot))
       .vacuumTo(retainManifest, olderThanMs)
 

@@ -79,7 +79,7 @@ final class ManifestStore(
     * didn't move yields an empty change set. */
   def changesBetween(fromManifest: Long, toManifest: Long): Map[String, ChangeSet] = {
     val inc = fmt match {
-      case i: IncrementalRead => i
+      case m: ManifestParquet => m
       case _ => throw new UnsupportedOperationException(
         s"backend ${fmt.getClass.getSimpleName} does not support incremental reads")
     }
@@ -106,7 +106,7 @@ final class ManifestStore(
     * tables have been compacted past their tombstones. */
   def vacuumTo(retainManifest: Long, olderThanMs: Long = 0L): Map[String, VacuumStats] = {
     val v = fmt match {
-      case x: Vacuumable => x
+      case m: ManifestParquet => m
       case _ => throw new UnsupportedOperationException(
         s"backend ${fmt.getClass.getSimpleName} does not support vacuum")
     }

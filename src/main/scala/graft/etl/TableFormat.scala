@@ -7,16 +7,17 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
   * transactional table format (Delta, Iceberg, Hudi) would fulfil.
   *
   * The reference gets atomic `INSERT … ON CONFLICT DO NOTHING
-  * RETURNING` from Postgres (`etl_pipeline.py:594-612`); this engine's
-  * default backend models each table as a VERSIONED PARQUET directory
-  * (SURVEY §7.4 risk 1): immutable version dirs `v=N`, "merge" =
-  * [[Load.upsert]]'s anti-join chain + a new version commit, RETURNING
-  * computed pre-write. That carries a documented single-writer-per-
-  * table assumption — two concurrent merges could both anti-join
-  * against `v=N` and race the `v=N+1` commit. A real deployment swaps
-  * in a format whose commit protocol arbitrates that race
-  * (`MERGE WHEN NOT MATCHED`); everything above this trait is
-  * unchanged, which is the point of the seam.
+  * RETURNING` from Postgres (`etl_pipeline.py:594-612`); this engine
+  * has one commit protocol, [[ManifestParquet]]: a table version is an
+  * immutable manifest listing immutable parquet data dirs, "merge" =
+  * [[Load.upsert]]'s anti-join chain + an O(batch) append commit, and
+  * RETURNING is computed pre-write. Version N+1 is published by an
+  * exclusive manifest commit, so of two merges that both anti-joined
+  * against version N only one commits; the other fails loudly
+  * instead of dropping the winner's rows. The trait stays a
+  * seam: [[TableFormat.Backend]] lets specs and a timing decorator
+  * wrap or substitute the backend, and everything above it is
+  * unchanged.
   */
 trait TableFormat {
 
@@ -29,19 +30,17 @@ trait TableFormat {
   /** Read `version` restricted to rows with `column` in the inclusive
     * interval [lower, upper] (an absent bound is open; both absent =
     * the full version). Semantically IDENTICAL to
-    * `readVersion(...).where(...)` on every backend — that is the
-    * default — but a backend that keeps file-level statistics
-    * ([[ManifestParquet]]) PRUNES non-matching files from the scan
-    * before Spark ever lists them: a point read against a year of
-    * daily appends plans over the one matching day's files instead of
-    * 365 dirs. (Parquet row-group skipping still applies inside
-    * whatever survives the prune — this is the layer ABOVE it, the
-    * Delta/Iceberg data-skipping shape.) Safe for null-bearing
-    * columns because a range predicate is null-rejecting. */
+    * `readVersion(...).where(...)`, but a backend that keeps
+    * file-level statistics ([[ManifestParquet]]) PRUNES non-matching
+    * files from the scan before Spark ever lists them: a point read
+    * against a year of daily appends plans over the one matching
+    * day's files instead of 365 dirs. (Parquet row-group skipping
+    * still applies inside whatever survives the prune — this is the
+    * layer ABOVE it, the Delta/Iceberg data-skipping shape.) Safe for
+    * null-bearing columns because a range predicate is
+    * null-rejecting. */
   def readVersionRange(table: String, version: Long, column: String,
-      lower: Option[Any], upper: Option[Any]): DataFrame =
-    readVersion(table, version)
-      .where(TableFormat.rangeCondition(column, lower, upper))
+      lower: Option[Any], upper: Option[Any]): DataFrame
 
   /** An UPPER BOUND on max(`column`) over `version`, derived from
     * commit statistics alone — NO Spark job, no file listed. Exact
@@ -52,17 +51,16 @@ trait TableFormat {
     * which deliberately keeps ids monotonic across erasures. None
     * when the backend keeps no statistics, any file lacks them for
     * this column, or no committed row carried a value. */
-  def statsUpperBound(table: String, version: Long, column: String): Option[Any] =
-    None
+  def statsUpperBound(table: String, version: Long, column: String): Option[Any]
 
   /** Highest committed version, 0 if the table does not exist. */
   def currentVersion(table: String): Long
 
   /** Backend commit primitive: persist `df` as version
     * `expectedBase + 1`, FAILING (not clobbering) if any other writer
-    * committed after `expectedBase` — each backend supplies its own
-    * arbitration (filesystem rename, log CAS, …). Returns the
-    * committed version. */
+    * committed after `expectedBase` — the backend supplies the
+    * arbitration (a no-overwrite manifest rename in
+    * [[ManifestParquet]]). Returns the committed version. */
   def tryCommit(table: String, df: DataFrame, expectedBase: Long): Long
 
   /** Create-or-replace the table with `df` as its next version. */
@@ -78,18 +76,13 @@ trait TableFormat {
     * writer derives content ONLY from its pinned state while its
     * commit SUPERSEDES any orphan versions a crashed run left behind
     * (orphans are never unioned in; they just become dead versions no
-    * manifest references).
+    * manifest references). `ontoVersion <= 0` creates the table with
+    * `delta` as its content.
     *
-    * Default implementation is read-union-rewrite through
-    * [[tryCommit]] — correct everywhere but O(history) bytes written
-    * per commit. [[ManifestParquet]] overrides it with the
-    * transactional-format shape: an O(batch) commit that writes ONLY
-    * the delta's files and a new manifest line. */
+    * The commit is O(batch): it writes ONLY the delta's files and a
+    * new manifest line, never history's. */
   def tryAppend(table: String, delta: DataFrame, ontoVersion: Long,
-      expectedBase: Long): Long =
-    if (ontoVersion <= 0) tryCommit(table, delta, expectedBase)
-    else tryCommit(table,
-      readVersion(table, ontoVersion).unionByName(delta), expectedBase)
+      expectedBase: Long): Long
 
   /** DELETE-by-key commit: the next version's logical content is
     * version `ontoVersion`'s content minus every row whose value in
@@ -97,24 +90,15 @@ trait TableFormat {
     * (right-to-be-forgotten). Version arguments as in [[tryAppend]]:
     * reads pinned to `ontoVersion`, arbitration at `expectedBase`.
     *
-    * Default implementation is the read-anti-join-rewrite through
-    * [[tryCommit]] — correct everywhere but O(history) bytes written.
-    * [[ManifestParquet]] overrides it with a DELETION-VECTOR commit:
-    * stage only the key set and append a tombstone entry to the
-    * manifest, so erasing k documents from a year of history writes
-    * O(k) bytes ([[ManifestParquet.compact]] later materializes the
-    * subtraction and drops the tombstone). An empty key set still
-    * mints a version — callers that want no-op elision guard before
+    * The commit is a DELETION VECTOR: stage only the key set and
+    * append a tombstone entry to the manifest, so erasing k documents
+    * from a year of history writes O(k) bytes
+    * ([[ManifestParquet.compact]] later materializes the subtraction
+    * and drops the tombstone). An empty key set still mints a
+    * version — callers that want no-op elision guard before
     * calling. */
   def tryDeleteRows(table: String, keys: DataFrame, ontoVersion: Long,
-      expectedBase: Long): Long = {
-    val keyCol = TableFormat.deleteKeyCol(keys)
-    require(ontoVersion > 0, s"table $table does not exist")
-    tryCommit(table,
-      readVersion(table, ontoVersion)
-        .join(keys.dropDuplicates(keyCol), Seq(keyCol), "left_anti"),
-      expectedBase)
-  }
+      expectedBase: Long): Long
 
   /** `MERGE WHEN NOT MATCHED THEN INSERT` under the table's unique
     * constraints (DDL order), with `priority` as the within-batch
@@ -125,7 +109,7 @@ trait TableFormat {
     * Defined ONCE on the trait: the merge semantics ARE the contract;
     * backends only supply read + arbitrated commit. RETURNING is
     * computed pre-commit against the version the anti-joins saw —
-    * committed versions are immutable in every backend, so the lazy
+    * committed versions are immutable, so the lazy
     * frame remains valid after the commit — and the commit supersedes
     * EXACTLY the version read, so a racer's rows can never be
     * silently dropped. */
@@ -145,7 +129,7 @@ trait TableFormat {
     if (inserted.isEmpty) inserted
     // the merged state IS existing ∪ inserted — commit it as an
     // APPEND of the survivors onto the version the anti-joins saw,
-    // so a manifest-log backend pays O(inserted), not O(table)
+    // so the commit pays O(inserted), not O(table)
     else { tryAppend(table, inserted, base, base); inserted }
   }
 
@@ -170,10 +154,9 @@ trait TableFormat {
 }
 
 object TableFormat {
-  /** How a store root resolves to a backend. The default is the
-    * manifest-log backend ([[ManifestParquet]]) — O(batch) append
-    * commits — for every runnable main; specs swap in the others to
-    * prove the pipelines are backend-agnostic above the seam. */
+  /** How a store root resolves to a backend: [[ManifestParquet]] for
+    * every runnable main. A caller may wrap it (perfbench's timing
+    * decorator) without touching the pipelines above the seam. */
   type Backend = (SparkSession, String) => TableFormat
   val DefaultBackend: Backend = (s, r) => new ManifestParquet(s, r)
 
@@ -213,180 +196,11 @@ object TableFormat {
 final case class ChangeSet(
     appended: DataFrame, deletedKeys: Map[String, DataFrame])
 
-/** Incremental (CDC) reads — backends whose commit log can answer
-  * "what changed between version A and B" without diffing data.
-  * [[ManifestParquet]] implements it from manifest structure alone;
-  * compaction commits are marked dataChange=false so maintenance is
-  * invisible to incremental readers (the Delta convention). A
-  * full-rewrite commit that DOES change data (merge-update, erasure
-  * on a rewrite backend) makes the range non-incremental: the reader
-  * gets a loud error telling it to full-refresh, never a silent
-  * wrong delta. */
-trait IncrementalRead {
-  def changesBetween(table: String, fromVersion: Long, toVersion: Long): ChangeSet
-}
-
-/** What [[Vacuumable.vacuum]] reclaimed. */
+/** What [[ManifestParquet.vacuum]] reclaimed. */
 final case class VacuumStats(
     dirsDeleted: Long, bytesDeleted: Long, manifestsDeleted: Long)
 
-/** Physical reclamation — the file-backed backends implement it; the
-  * in-memory commit log has nothing to reclaim. Vacuum is the OTHER
-  * half of erasure: [[TableFormat.tryDeleteRows]] makes forgotten rows
-  * unreadable through every retained version, vacuum makes their
-  * BYTES leave the disk once the versions that carried them age out
-  * of the retention window. */
-trait Vacuumable {
-  /** Drop every version of `table` below `retainFrom` and physically
-    * delete the files only those versions referenced, plus orphan
-    * dirs no retained version references (crashed commits, race
-    * losers). `olderThanMs` is the in-flight-writer guard: a dir
-    * younger than this is never deleted even if unreferenced, because
-    * it may be a commit's staged-but-not-yet-published data (the
-    * Delta/Iceberg retention-threshold shape). Run with the default 0
-    * only when no writer is in flight. */
-  def vacuum(table: String, retainFrom: Long, olderThanMs: Long = 0L): VacuumStats
-}
-
-/** The default backend: one directory per table holding immutable
-  * `v=N` parquet version dirs. Commit protocol: write to a hidden
-  * `_tmp` dir, then a filesystem `rename` to `v=N+1` — the rename is
-  * the atomic commit point on HDFS-semantics stores (on object stores
-  * without atomic rename you want a log-based format; that's what the
-  * trait is for). Old versions stay readable (cheap time travel /
-  * concurrent readers never see a torn table); retention of old
-  * versions is the deployment's vacuum policy, out of scope here.
-  */
-final class VersionedParquet(spark: SparkSession, root: String)
-    extends TableFormat with Vacuumable {
-
-  private def fs =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Delete `v=N` dirs below `retainFrom` plus stale `_tmp_*` staging
-    * dirs from crashed commits. Every version dir is self-contained
-    * (no sharing across versions), so "referenced by a retained
-    * version" is simply N >= retainFrom. */
-  override def vacuum(table: String, retainFrom: Long,
-      olderThanMs: Long = 0L): VacuumStats = {
-    val cur = currentVersion(table)
-    require(cur > 0, s"table $table does not exist under $root")
-    require(retainFrom >= 1 && retainFrom <= cur,
-      s"retainFrom $retainFrom outside committed versions 1..$cur of $table")
-    val cutoff = System.currentTimeMillis() - olderThanMs
-    var dirs = 0L; var bytes = 0L; var versions = 0L
-    for (st <- fs.listStatus(tableDir(table)).toSeq) {
-      val name = st.getPath.getName
-      val isVersion = name.startsWith("v=")
-      val dead =
-        if (isVersion) name.stripPrefix("v=").toLong < retainFrom
-        else st.getModificationTime <= cutoff // orphan _tmp staging dir
-      if (dead) {
-        bytes += fs.getContentSummary(st.getPath).getLength
-        dirs += 1
-        if (isVersion) versions += 1
-        fs.delete(st.getPath, true)
-      }
-    }
-    VacuumStats(dirs, bytes, versions)
-  }
-
-  private def tableDir(table: String) = new Path(root, table)
-
-  private def versionsOf(table: String): Seq[Long] = {
-    val dir = tableDir(table)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toLong)
-      .sorted
-  }
-
-  override def currentVersion(table: String): Long =
-    versionsOf(table).lastOption.getOrElse(0L)
-
-  override def read(table: String): DataFrame = {
-    val v = currentVersion(table)
-    require(v > 0, s"table $table does not exist under $root")
-    readVersion(table, v)
-  }
-
-  override def readVersion(table: String, version: Long): DataFrame =
-    spark.read.parquet(new Path(tableDir(table), s"v=$version").toString)
-
-  /** Optimistic-concurrency commit primitive: writes `df` as version
-    * `expectedBase + 1` and FAILS if that version already exists —
-    * i.e. if any other writer committed after the version this
-    * writer's reads were based on. (On HDFS semantics the rename
-    * itself arbitrates; LocalFileSystem renames INTO an existing dir,
-    * so the exists-check carries the guard there. The residual TOCTOU
-    * window between the two is what [[CommitLogTable]]'s CAS — and a
-    * real log-based format's commit protocol — closes.) */
-  override def tryCommit(table: String, df: DataFrame, expectedBase: Long): Long = {
-    val next = expectedBase + 1
-    val tmp = new Path(tableDir(table), s"_tmp_v$next")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val dest = new Path(tableDir(table), s"v=$next")
-    if (fs.exists(dest) || !fs.rename(tmp, dest))
-      throw new IllegalStateException(
-        s"commit race on $table v=$next: another writer committed after " +
-          s"the base version this merge read (single-writer contract)")
-    next
-  }
-
-}
-
-/** A second backend proving the seam: an in-memory COMMIT LOG whose
-  * versions are eagerly-materialized snapshots and whose commit is a
-  * synchronized compare-and-swap on the expected base version — the
-  * arbitration shape of a log-based format (Delta/Iceberg), with no
-  * rename TOCTOU window at all. Committed versions are
-  * `localCheckpoint(true)` snapshots, so pinned readers get the same
-  * immutability VersionedParquet gets from immutable `v=N` dirs.
-  * Session-lifetime state (no persistence): a test/demo backend whose
-  * job is to pass the identical TableFormatSpec contract suite
-  * through a different commit protocol. */
-final class CommitLogTable(spark: SparkSession) extends TableFormat {
-
-  private val log =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[DataFrame]]()
-
-  private def versions(table: String): Vector[DataFrame] =
-    Option(log.get(table)).getOrElse(Vector.empty)
-
-  override def currentVersion(table: String): Long = versions(table).size.toLong
-
-  override def read(table: String): DataFrame = {
-    val v = currentVersion(table)
-    require(v > 0, s"table $table does not exist in the commit log")
-    readVersion(table, v)
-  }
-
-  override def readVersion(table: String, version: Long): DataFrame = {
-    val vs = versions(table)
-    require(version >= 1 && version <= vs.size,
-      s"table $table has versions 1..${vs.size}, not $version")
-    vs(version.toInt - 1)
-  }
-
-  /** CAS commit: the version check and the log append are one atomic
-    * step, so a writer whose base was superseded always fails cleanly.
-    * (The snapshot materialization runs a Spark job inside the lock —
-    * fine for a demo backend; a real log format stages files first
-    * and holds the lock only for the log append.) */
-  override def tryCommit(table: String, df: DataFrame, expectedBase: Long): Long =
-    synchronized {
-      val cur = currentVersion(table)
-      if (cur != expectedBase)
-        throw new IllegalStateException(
-          s"commit race on $table: expected base $expectedBase but log is at $cur")
-      log.put(table, versions(table) :+ df.localCheckpoint(true))
-      expectedBase + 1
-    }
-}
-
-/** The third backend — the one that makes DAILY APPEND COMMITS
+/** The table format — the one that makes DAILY APPEND COMMITS
   * O(batch): a table version is a MANIFEST (an immutable text file in
   * `_log/`) listing the immutable data directories whose union is the
   * version's content — the Delta/Iceberg commit shape. An append
@@ -394,9 +208,8 @@ final class CommitLogTable(spark: SparkSession) extends TableFormat {
   * manifest; history's files are never rewritten, so the bytes
   * written per daily commit are proportional to the batch, not the
   * corpus (TableFormatSpec asserts it). Overwrites (merge-update,
-  * erasure, compaction) still rewrite — that is what they mean;
-  * deletion vectors would be the next refinement of THIS backend, not
-  * a new seam.
+  * compaction) still rewrite — that is what they mean; erasure
+  * commits a tombstone instead (below).
   *
   * Layout per table:
   * {{{
@@ -413,23 +226,31 @@ final class CommitLogTable(spark: SparkSession) extends TableFormat {
   * ABOVE it — order matters, so a later append of a previously
   * deleted key is NOT re-deleted (erasure then re-arrival is a
   * first-class sequence for the corpus store). [[tryDeleteRows]]
-  * therefore commits O(keys) bytes where the rewrite default commits
-  * O(history); [[compact]] materializes the subtraction and drops the
-  * tombstones; [[vacuum]] makes the erasure PHYSICAL once the
-  * pre-delete versions age out of retention.
+  * therefore commits O(keys) bytes, not O(history); [[compact]]
+  * materializes the subtraction and drops the tombstones; [[vacuum]]
+  * makes the erasure PHYSICAL once the pre-delete versions age out
+  * of retention.
   *
   * Commit protocol: stage data dirs first (uniquely named — racing
   * writers can never clobber each other's staged files), then
   * CREATE-EXCLUSIVE the manifest for version N+1 — the exclusive
   * create is the arbitration point, so the loser of a race fails
   * loudly with its staged dir left as an orphan no manifest
-  * references (vacuum policy, as with orphan `v=N` dirs in
-  * [[VersionedParquet]]). Reads resolve ONLY through manifests, with
-  * the manifest's own schema (name-based parquet column resolution —
-  * a dir staged with different column ORDER still reads correctly,
-  * and an empty version reads as an empty frame without inference). */
+  * references ([[vacuum]] reclaims it). Reads resolve ONLY through
+  * manifests, with the manifest's own schema (name-based parquet
+  * column resolution — a dir staged with different column ORDER
+  * still reads correctly, and an empty version reads as an empty
+  * frame without inference).
+  *
+  * Incremental (CDC) reads come from manifest structure alone
+  * ([[changesBetween]]); compaction commits are marked
+  * dataChange=false so maintenance is invisible to incremental readers
+  * (the Delta convention), while any other rewrite that DOES change
+  * data (merge-update, overwrite) makes the range non-incremental: the
+  * reader gets a loud error telling it to full-refresh, never a silent
+  * wrong delta. */
 final class ManifestParquet(spark: SparkSession, root: String)
-    extends TableFormat with Vacuumable with IncrementalRead {
+    extends TableFormat {
 
   import org.apache.spark.sql.types.{DataType, StructType}
   import ManifestParquet.{ColStats, DataEntry, Entry, EntryMeta, TombstoneEntry,
@@ -693,9 +514,9 @@ final class ManifestParquet(spark: SparkSession, root: String)
     * both pass the exists check and both rename "successfully". The
     * post-rename read-back below catches the writer whose bytes were
     * replaced and fails it loudly; the residual window — the winner's
-    * verify completing before the loser's overwrite lands — is the
-    * narrow check-then-act gap [[VersionedParquet.tryCommit]]
-    * documents, closed only by a real log format's CAS.)
+    * verify completing before the loser's overwrite lands — is a
+    * narrow check-then-act gap that only an atomic put-if-absent,
+    * a real log format's CAS, closes.)
     *
     * `onto` records the version this commit was BUILT ON — the
     * ancestry pointer [[changesBetween]] walks. */
@@ -825,7 +646,7 @@ final class ManifestParquet(spark: SparkSession, root: String)
     * of `toVersion` (manifest-pinned versions always are). Read the
     * range before it ages out: [[vacuum]] may reclaim in-range dirs
     * once no RETAINED manifest references them. */
-  override def changesBetween(table: String, fromVersion: Long,
+  def changesBetween(table: String, fromVersion: Long,
       toVersion: Long): ChangeSet = {
     val cur = currentVersion(table)
     require(toVersion >= 1 && toVersion <= cur,
@@ -1011,16 +832,21 @@ final class ManifestParquet(spark: SparkSession, root: String)
         dataChange = false)), onto = base)
   }
 
-  /** Drop manifests below `retainFrom` and physically delete every
-    * dir (data or tombstone key set) referenced ONLY by them, plus
-    * unreferenced orphans older than `olderThanMs` (crashed commits'
-    * staged dirs — the age gate keeps an in-flight commit's
-    * staged-but-unpublished dir safe). This is what turns a logical
-    * erasure physical: after the pre-delete manifests age out and
+  /** Physical reclamation, the OTHER half of erasure:
+    * [[tryDeleteRows]] makes forgotten rows unreadable through every
+    * retained version, vacuum makes their BYTES leave the disk once
+    * the versions that carried them age out of retention. Drop
+    * manifests below `retainFrom` and physically delete every dir
+    * (data or tombstone key set) referenced ONLY by them, plus
+    * unreferenced orphans (crashed commits, race losers) older than
+    * `olderThanMs` — the in-flight-writer guard: a younger dir may be
+    * a commit's staged-but-not-yet-published data (the Delta/Iceberg
+    * retention-threshold shape). Run with the default 0 only when no
+    * writer is in flight. After the pre-delete manifests age out and
     * compact() has materialized the subtraction, no retained manifest
     * references the forgotten rows' files, and vacuum removes the
     * bytes (CorpusEtlSpec's erasure receipt). */
-  override def vacuum(table: String, retainFrom: Long,
+  def vacuum(table: String, retainFrom: Long,
       olderThanMs: Long = 0L): VacuumStats = {
     val cur = currentVersion(table)
     require(cur > 0, s"table $table does not exist under $root")

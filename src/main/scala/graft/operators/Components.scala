@@ -113,6 +113,33 @@ object Components {
     (labels, iters)
   }
 
+  /** Fold one pair batch into a PERSISTED components labeling kept as
+    * a versioned [[graft.etl.TableFormat]] table — the streaming
+    * cadence of cluster maintenance
+    * ([[graft.streaming.StreamingDedup.clusterMaintenance]] calls it
+    * per micro-batch). The daily batch job (`q_cc_incremental`)
+    * applies the same [[incremental]] fold to yesterday's staged
+    * labeling directly. First batch bootstraps the table with a
+    * from-scratch components run; later batches apply [[incremental]]
+    * — CC over the delta graph only, the history never re-clusters —
+    * and commit the merged labeling as the next version. An empty
+    * batch commits nothing (the trait's "a no-op merge must not mint a
+    * version" discipline: an idle stream would otherwise rewrite an
+    * identical labeling every trigger). Returns the current version. */
+  def foldInto(
+      fmt: graft.etl.TableFormat,
+      table: String,
+      pairs: DataFrame): Long = {
+    if (pairs.isEmpty) fmt.currentVersion(table)
+    else {
+      val merged =
+        if (fmt.currentVersion(table) == 0) connectedComponents(pairs)
+        else incremental(fmt.read(table), pairs)
+      fmt.overwrite(table, merged)
+      fmt.currentVersion(table)
+    }
+  }
+
   /** Incremental maintenance of a components labeling: fold a NEW
     * pair batch into an existing (node, label) labeling WITHOUT
     * re-running components over the historical pair set — the daily
@@ -129,33 +156,6 @@ object Components {
     * underlying members, because each old label was already the min
     * of its members (AdvancedOpsSpec asserts bit-equality, including
     * the new-chain-bridges-two-old-components case). */
-  /** Fold one pair batch into a PERSISTED components labeling kept as
-    * a versioned [[graft.etl.TableFormat]] table — the single
-    * maintenance primitive both cadences share: streaming
-    * ([[graft.streaming.StreamingDedup.clusterMaintenance]] calls it
-    * per micro-batch) and the daily batch job (`q_cc_incremental`
-    * drives it through a table seeded with yesterday's labeling).
-    * First batch bootstraps the table with a from-scratch components
-    * run; later batches apply [[incremental]] — CC over the delta
-    * graph only, the history never re-clusters — and commit the
-    * merged labeling as the next version. An empty batch commits
-    * nothing (the trait's "a no-op merge must not mint a version"
-    * discipline: an idle stream would otherwise rewrite an identical
-    * labeling every trigger). Returns the current version. */
-  def foldInto(
-      fmt: graft.etl.TableFormat,
-      table: String,
-      pairs: DataFrame): Long = {
-    if (pairs.isEmpty) fmt.currentVersion(table)
-    else {
-      val merged =
-        if (fmt.currentVersion(table) == 0) connectedComponents(pairs)
-        else incremental(fmt.read(table), pairs)
-      fmt.overwrite(table, merged)
-      fmt.currentVersion(table)
-    }
-  }
-
   def incremental(oldLabels: DataFrame, newPairs: DataFrame): DataFrame = {
     val la = oldLabels.select(col("node").as("a"), col("label").as("la"))
     val lb = oldLabels.select(col("node").as("b"), col("label").as("lb"))

@@ -152,24 +152,6 @@ object CorpusQueries {
       .orderBy(col("a").asc, col("b").asc)
   }
 
-  /** Incremental dedup-CLUSTER maintenance
-    * ([[graft.operators.Components.incremental]]): yesterday's corpus
-    * (3/4 of the table) carries a components labeling; today's batch
-    * (the other 1/4) mines its pairs against the band index + within
-    * itself, and the labeling folds the delta in by contracting old
-    * components to representatives — components never re-runs over
-    * the historical pair set. The labeling lives as a VERSIONED
-    * [[graft.etl.TableFormat]] table: yesterday's labeling is
-    * committed as v1, the delta folds in through
-    * [[graft.operators.Components.foldInto]] — the same maintenance
-    * primitive [[graft.streaming.StreamingDedup.clusterMaintenance]]
-    * drives per micro-batch — and the output READS the committed v2,
-    * so the oracle hash gates the persisted-artifact path end-to-end.
-    * Output = the merged labeling plus a `changed` flag (new node or
-    * relabeled), i.e. exactly what a daily pipeline writes back to
-    * the cluster table. The oracle recomputes BOTH labelings from
-    * scratch (full + corpus-only recursive CTEs), so the hash gate
-    * proves incremental == full-recompute. */
   /** Opt-in per-step wall attribution (`GRAFT_PROFILE=1`): stderr
     * lines for the eager steps of composite queries, so "which term
     * dominates" is measured, not guessed. */
@@ -183,6 +165,22 @@ object CorpusQueries {
       r
     }
 
+  /** Incremental dedup-CLUSTER maintenance
+    * ([[graft.operators.Components.incremental]]): yesterday's corpus
+    * (3/4 of the table) carries a components labeling; today's batch
+    * (the other 1/4) mines its pairs against the band index + within
+    * itself, and the labeling folds the delta in by contracting old
+    * components to representatives — components never re-runs over
+    * the historical pair set. Yesterday's labeling is the staged
+    * prior (a warehouse table when a [[StageStore]] root is set), and
+    * the fold is the one [[graft.operators.Components.foldInto]]
+    * commits per micro-batch for
+    * [[graft.streaming.StreamingDedup.clusterMaintenance]].
+    * Output = the merged labeling plus a `changed` flag (new node or
+    * relabeled), i.e. exactly what a daily pipeline writes back to
+    * the cluster table. The oracle recomputes BOTH labelings from
+    * scratch (full + corpus-only recursive CTEs), so the hash gate
+    * proves incremental == full-recompute. */
   def q_cc_incremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.table(spark, dir, "documents")
     val batch = docs.where(col("doc_id") % 4 === 0)
@@ -204,22 +202,18 @@ object CorpusQueries {
       index, batchBands, JaccardThreshold).select("a", "b")
     val intra = TextOps.minhashDupPairsFromBands(
       batchBands, JaccardThreshold).select("a", "b")
-    val clusters = new graft.etl.CommitLogTable(spark)
-    profiled("seed-clusters") { clusters.overwrite("clusters", oldLabels) }
-    // materialize the mined delta ONCE before the fold: foldInto walks
-    // its pairs plan several times (empty-batch guard, contraction,
-    // new-node derivation) and would re-run the pair mining each
-    // time; the fold is eager (it commits the merged table), so both
-    // in-query checkpoints are dead — and freed — once it returns
+    // materialize the mined delta ONCE before the fold: incremental
+    // walks its pairs plan several times (contraction, new-node
+    // derivation) and would re-run the pair mining each time. The
+    // returned plan reads the delta, so the query's scope owns it;
+    // the band rows are dead once the delta is materialized
     val delta = profiled("mine-delta") {
-      cross.unionByName(intra).localCheckpoint(true)
+      graft.operators.CheckpointBlocks.local(cross.unionByName(intra))
     }
     graft.operators.CheckpointBlocks.free(batchBands)
-    profiled("fold") {
-      graft.operators.Components.foldInto(clusters, "clusters", delta)
+    val merged = profiled("fold") {
+      graft.operators.Components.incremental(oldLabels, delta)
     }
-    graft.operators.CheckpointBlocks.free(delta)
-    val merged = clusters.read("clusters")
     merged
       .join(oldLabels.withColumnRenamed("label", "old_label"), Seq("node"), "left")
       .select(col("node").as("doc_id"), col("label").as("component"),

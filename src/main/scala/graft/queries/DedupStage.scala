@@ -25,10 +25,11 @@ import graft.text.TextOps
   * bit-equality); without a root it is an eager `localCheckpoint`,
   * session-lifetime — a corpus snapshot is immutable, so in-process
   * there is no invalidation story beyond the session ending with its
-  * blocks. Daily maintenance of the persisted labeling goes through
-  * [[graft.operators.Components.foldInto]] (see `q_cc_incremental`
-  * for the batch cadence, [[graft.streaming.StreamingDedup
-  * .clusterMaintenance]] for the streaming one).
+  * blocks. Daily maintenance of the labeling folds a pair delta in
+  * with [[graft.operators.Components.incremental]] (`q_cc_incremental`
+  * for the batch cadence; [[graft.operators.Components.foldInto]]
+  * commits the same fold per micro-batch in
+  * [[graft.streaming.StreamingDedup.clusterMaintenance]]).
   */
 object DedupStage {
 

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.{DoubleAdder, LongAdder}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.VersionedParquet
+import graft.etl.ManifestParquet
 import graft.operators.CheckpointBlocks
 
 /** Where staged corpus artifacts persist BETWEEN sessions: a
@@ -32,7 +32,10 @@ private[graft] object StageStore {
   // v2: round-12 optimization — prEdges gained dst_degree, prDegrees
   // gained n_in (the join-free PageRank round shape); a v1 warehouse
   // would satisfy the resolve with the old schemas
-  val FormatVersion = 2
+  // v3: artifacts persist as ManifestParquet tables (`_log/` manifests
+  // over `d-*` data dirs) instead of `v=N` directories; the new table
+  // names keep a pinned warehouse from ever reading an old-layout dir
+  val FormatVersion = 3
 
   private val testOverrides = new ConcurrentHashMap[String, String]()
 
@@ -106,7 +109,7 @@ private[graft] object StageStore {
 /** Bucketed catalog commits for POSITIONED staged layouts (round 13,
   * verdict item 4): a layout whose value is its partitioning (the
   * fuzzy deletion index pre-positioned on its join key) cannot ride
-  * [[graft.etl.VersionedParquet]] — a plain parquet round-trip
+  * [[graft.etl.ManifestParquet]] — a plain parquet round-trip
   * discards exactly the layout it exists to hold. The production
   * shape is a table written BUCKETED on the key at index-write time
   * ([[graft.io.BucketedTables]], the `band_index` shape): a fresh JVM
@@ -384,8 +387,8 @@ private[graft] object Stages {
   * (`staged_sec`) instead of min-of-reps hiding it.
   *
   * When [[StageStore]] resolves a warehouse root for the snapshot
-  * dir, the artifact is a VERSIONED TABLE: first build writes v=1
-  * through [[graft.etl.VersionedParquet]] and frees the build's
+  * dir, the artifact is a VERSIONED TABLE: first build commits
+  * version 1 through [[graft.etl.ManifestParquet]] and frees the build's
   * checkpoint blocks (the parquet artifact supersedes them); every
   * later request — including a COLD SESSION — reads the committed
   * version instead of rebuilding (StageStoreSpec proves read-not-
@@ -479,7 +482,7 @@ private[graft] final class StageCache {
     * would discard exactly the partitioning they exist to hold (a
     * real warehouse writes such tables BUCKETED on the key —
     * BucketingSpec proves that layout's zero-exchange join — but a
-    * plain versioned parquet dir cannot carry it). */
+    * plain parquet table cannot carry it). */
   def apply(spark: SparkSession, dir: String, what: String,
       persistable: Boolean = true)(
       build: => DataFrame): DataFrame = {
@@ -497,7 +500,7 @@ private[graft] final class StageCache {
           builds.increment()
           build
         case Some(root) =>
-          val fmt = new VersionedParquet(spark, root)
+          val fmt = new ManifestParquet(spark, root)
           val tbl = StageStore.tableName(dir, what2)
           // the store read is MATERIALIZED once per session: a memoized
           // lazy scan would re-read parquet on every consuming query

@@ -291,22 +291,17 @@ object StreamingCharts {
         spark.sparkContext.parallelize(rows), schema)
   }
 
-  /** Durable ranking sink through the [[graft.etl.VersionedParquet]]
-    * table-format seam: the (batchId → committed) ledger rides ON the
-    * rows (`batch_id` column), so ledger and data land in the SAME
-    * atomic versioned-parquet commit — the guarantee the in-memory
-    * [[RankingStore]] documents itself as lacking. A driver restart
-    * (new store instance, same root) rehydrates exactly the committed
-    * ledger from the table, so a micro-batch replayed across the
-    * crash commits nothing (crash-replay spec'd in StreamingSpec).
-    *
-    * Scale note: each commit rewrites the table as the next version —
-    * fine for a daily top-k table (tens of rows/day); a high-volume
-    * deployment would swap in a log-based [[graft.etl.TableFormat]]
-    * whose commit appends files instead of rewriting, behind this
-    * same interface. */
+  /** Durable ranking sink through [[graft.etl.ManifestParquet]]: the
+    * (batchId → committed) ledger rides ON the rows (`batch_id`
+    * column), so ledger and data land in the SAME atomic manifest
+    * commit — the guarantee the in-memory [[RankingStore]] documents
+    * itself as lacking. A driver restart (new store instance, same
+    * root) rehydrates exactly the committed ledger from the table, so
+    * a micro-batch replayed across the crash commits nothing
+    * (crash-replay spec'd in StreamingSpec). Each micro-batch commits
+    * an O(batch) append: its own data dir plus one manifest line. */
   final class DurableRankingStore(spark: SparkSession, root: String) extends RankingSink {
-    private val fmt = new graft.etl.VersionedParquet(spark, root)
+    private val fmt = new graft.etl.ManifestParquet(spark, root)
     private val table = "rankings"
 
     private def current(): Option[DataFrame] =
@@ -324,11 +319,10 @@ object StreamingCharts {
     def appendOnce(batchId: Long, df: DataFrame): Unit = synchronized {
       // an EMPTY micro-batch must still enter the row-borne ledger:
       // otherwise every at-least-once replay of it fails the check
-      // below and rewrites the whole table as a new identical version
-      // (unbounded churn), and committedBatchIds() never learns of
-      // it. Empty batches commit one all-NULL sentinel row — rankBatch
-      // output never carries a NULL rank, so snapshot() filters them
-      // out without ambiguity.
+      // below and commits yet another version (unbounded churn), and
+      // committedBatchIds() never learns of it. Empty batches commit
+      // one all-NULL sentinel row — rankBatch output never carries a
+      // NULL rank, so snapshot() filters them out without ambiguity.
       val stamped0 = df.withColumn("batch_id", lit(batchId))
       val stamped =
         if (!df.isEmpty) stamped0
@@ -341,15 +335,13 @@ object StreamingCharts {
                 Seq.fill(df.schema.length)(null) :+ Long.box(batchId))),
             sentinelSchema)
         }
-      current() match {
-        case None => fmt.overwrite(table, stamped)
-        case Some(cur) =>
-          // the ledger check reads the SAME committed version the
-          // union below extends — no window where data commits
-          // without its ledger entry
-          if (cur.where(col("batch_id") === batchId).isEmpty)
-            fmt.overwrite(table, cur.unionByName(stamped))
-      }
+      val v = fmt.currentVersion(table)
+      // the ledger check reads the SAME committed version the append
+      // extends and arbitrates on — no window where data commits
+      // without its ledger entry
+      if (v == 0 ||
+          fmt.readVersion(table, v).where(col("batch_id") === batchId).isEmpty)
+        fmt.tryAppend(table, stamped, v, v): Unit
     }
 
     /** Committed-version probe (observability + the churn spec). */

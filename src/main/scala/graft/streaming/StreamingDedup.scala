@@ -90,10 +90,10 @@ object StreamingDedup {
     pairs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one maintenance primitive for both cadences: the same
-        // Components.foldInto the daily batch job (q_cc_incremental)
-        // drives — empty triggers mint no version, first batch
-        // bootstraps, later batches fold the delta graph only
+        // the daily batch job (q_cc_incremental) folds with the same
+        // Components.incremental; foldInto adds the commit — empty
+        // triggers mint no version, first batch bootstraps, later
+        // batches fold the delta graph only
         Components.foldInto(fmt, table, batch)
         ()
       }

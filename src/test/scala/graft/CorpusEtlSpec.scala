@@ -5,19 +5,16 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.etl.{TableFormat, VersionedParquet}
+import graft.etl.TableFormat
 import graft.text.Curation
 
 /** The store-backed daily corpus fold: batch-by-batch [[CorpusEtl]]
   * over a temp store must reproduce the one-shot [[Curation.curate]]
   * verdicts bit-for-bit (ascending-id batches, benchmark pinned from
   * the full corpus's eval slice — the `q_curate_incremental`
-  * equivalence, driven through the real manifest/commit path), on
-  * BOTH the O(batch) manifest-log backend (the default) and the
-  * versioned-parquet backend — the pipeline is backend-agnostic above
-  * the [[graft.etl.TableFormat]] seam. The manifest must make racing
-  * runs loud, phantom half-days invisible, and reused batch ids
-  * impossible. */
+  * equivalence, driven through the real manifest/commit path). The
+  * manifest must make racing runs loud, phantom half-days invisible,
+  * and reused batch ids impossible. */
 class CorpusEtlSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,41 +25,36 @@ class CorpusEtlSpec extends SparkSpec {
     graft.io.Tables.table(spark, "/root/testdata/sf0.001", "documents")
 
   private def fmtOf(root: String): TableFormat =
-    CorpusEtl.DefaultBackend(spark, root)
+    TableFormat.DefaultBackend(spark, root)
 
   private def flagRows(df: DataFrame) = df
     .select("doc_id", "n_tokens", "quality", "predicted", "is_eval",
       "is_exact_dup", "is_near_dup", "is_contaminated", "sampled_in", "kept")
     .orderBy("doc_id").collect().toSeq
 
-  private val backends: Seq[(String, CorpusEtl.Backend)] = Seq(
-    "manifest-parquet" -> CorpusEtl.DefaultBackend,
-    "versioned-parquet" -> ((s, r) => new VersionedParquet(s, r)))
+  test("[manifest-parquet] two-day fold over the store == one-shot curate over the union") {
+    val root = freshRoot()
+    val cfg = Curation.Config()
+    val mid = docs.agg(max($"doc_id")).head().getLong(0) / 2
+    CorpusEtl.init(spark, root,
+      docs.where($"doc_id" % cfg.evalModulus === 0), cfg)
+    val a1 = CorpusEtl.runBatch(spark, root, docs.where($"doc_id" <= mid), 1L, cfg)
+    val a2 = CorpusEtl.runBatch(spark, root, docs.where($"doc_id" > mid), 2L, cfg)
 
-  for ((name, backend) <- backends)
-    test(s"[$name] two-day fold over the store == one-shot curate over the union") {
-      val root = freshRoot()
-      val cfg = Curation.Config()
-      val mid = docs.agg(max($"doc_id")).head().getLong(0) / 2
-      CorpusEtl.init(spark, root,
-        docs.where($"doc_id" % cfg.evalModulus === 0), cfg, backend)
-      val a1 = CorpusEtl.runBatch(spark, root, docs.where($"doc_id" <= mid), 1L, cfg, backend)
-      val a2 = CorpusEtl.runBatch(spark, root, docs.where($"doc_id" > mid), 2L, cfg, backend)
+    val fmt = fmtOf(root)
+    val ledger = fmt.read("corpus_flags")
+    assert(flagRows(ledger) == flagRows(Curation.curate(docs, cfg)))
 
-      val fmt = backend(spark, root)
-      val ledger = fmt.read("corpus_flags")
-      assert(flagRows(ledger) == flagRows(Curation.curate(docs, cfg)))
+    // the audit is the ledger's arithmetic
+    assert(a1.nIn + a2.nIn == docs.count())
+    assert(a1.nKept + a2.nKept ==
+      ledger.where($"kept").count())
 
-      // the audit is the ledger's arithmetic
-      assert(a1.nIn + a2.nIn == docs.count())
-      assert(a1.nKept + a2.nKept ==
-        ledger.where($"kept").count())
-
-      // the kept table is exactly the ledger's kept set, text attached
-      val kept = fmt.read("corpus_kept")
-      assert(kept.select("doc_id").orderBy("doc_id").as[Long].collect().toSeq ==
-        ledger.where($"kept").orderBy("doc_id").select("doc_id").as[Long].collect().toSeq)
-    }
+    // the kept table is exactly the ledger's kept set, text attached
+    val kept = fmt.read("corpus_kept")
+    assert(kept.select("doc_id").orderBy("doc_id").as[Long].collect().toSeq ==
+      ledger.where($"kept").orderBy("doc_id").select("doc_id").as[Long].collect().toSeq)
+  }
 
   test("a daily commit writes O(batch) bytes against a much larger history") {
     val root = freshRoot()

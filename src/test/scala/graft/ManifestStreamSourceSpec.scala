@@ -18,7 +18,7 @@ class ManifestStreamSourceSpec extends SparkSpec {
     graft.io.Tables.table(spark, "/root/testdata/sf0.001", "documents")
 
   private def keptIds(root: String): Seq[Long] =
-    CorpusEtl.DefaultBackend(spark, root).read("corpus_kept")
+    graft.etl.TableFormat.DefaultBackend(spark, root).read("corpus_kept")
       .select("doc_id").orderBy("doc_id").as[Long].collect().toSeq
 
   private def sinkIds(name: String): Seq[Long] =

@@ -97,9 +97,8 @@ class PipelineE2ESpec extends SparkSpec {
     assert(md.contains("+1"))
   }
 
-  test("daily pipeline persisted through the VersionedParquet table format") {
-    import graft.etl.VersionedParquet
-    val fmt = new VersionedParquet(spark,
+  test("daily pipeline persisted through the default table format") {
+    val fmt = graft.etl.TableFormat.DefaultBackend(spark,
       java.nio.file.Files.createTempDirectory("e2efmt").toString)
     val tables = Seq("artist", "song", "artist_song_map", "ranking")
     def persist(db: MusicDb): Unit =

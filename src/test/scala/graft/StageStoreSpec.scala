@@ -4,13 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.{CommitLogTable, VersionedParquet}
+import graft.etl.ManifestParquet
 import graft.operators.Components
 import graft.queries.{DedupStage, GraphStage, LmStage, StageStore}
 
 /** The persisted-staged-artifact contract: with a warehouse root
   * configured, [[graft.queries.StageCache]] commits each artifact as
-  * a versioned TableFormat table on first build and every later
+  * a [[graft.etl.ManifestParquet]] table on first build and every later
   * request — including a COLD session — reads the committed version
   * instead of rebuilding, bit-equal to the in-process path. The
   * suite uses its own snapshot dir (symlinked at the source tables),
@@ -47,8 +47,8 @@ class StageStoreSpec extends SparkSpec {
       // TWO builds: components resolves its minhashPairs dependency
       // (the shared pair artifact, round 11) and then itself
       assert(DedupStage.buildCount == before + 2)
-      // the artifact is now a committed v=1 table in the warehouse
-      val fmt = new VersionedParquet(spark, wh)
+      // the artifact is now a committed version-1 table in the warehouse
+      val fmt = new ManifestParquet(spark, wh)
       val tbl = StageStore.tableName(dir,
         s"components|n=${graft.queries.CorpusQueries.ShingleN}" +
           s"|k=${graft.queries.CorpusQueries.MinhashK}" +
@@ -123,7 +123,7 @@ class StageStoreSpec extends SparkSpec {
     // (3,10) and adds a brand-new pair (20,21)
     val oldPairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
     val batch = Seq((3L, 10L), (20L, 21L)).toDF("a", "b")
-    val fmt = new CommitLogTable(spark)
+    val fmt = new ManifestParquet(spark, warehouse("fold"))
     fmt.overwrite("clusters", Components.connectedComponents(oldPairs))
     val v = Components.foldInto(fmt, "clusters", batch)
     assert(v == 2L)
@@ -140,7 +140,7 @@ class StageStoreSpec extends SparkSpec {
 
   test("foldInto bootstraps an absent table from scratch") {
     import spark.implicits._
-    val fmt = new CommitLogTable(spark)
+    val fmt = new ManifestParquet(spark, warehouse("boot"))
     val v = Components.foldInto(
       fmt, "boot", Seq((5L, 6L), (6L, 7L)).toDF("a", "b"))
     assert(v == 1L)

@@ -130,6 +130,13 @@ class StreamingSpec extends SparkSpec {
     s2.appendOnce(1L, StreamingCharts.rankBatch(day)) // a real new batch
     assert(s2.snapshot().count() === 2)
     assert(s2.committedBatchIds() === Set(0L, 1L))
+    // the second batch is an O(batch) append, not a rewrite: its
+    // version still lists the first batch's data dir, plus its own
+    val mp = new graft.etl.ManifestParquet(spark, root)
+    val firstDir = mp.manifestEntries("rankings", 1L).head.takeWhile(_ != ' ')
+    val entries = mp.manifestEntries("rankings", s2.storeVersion)
+    assert(entries.size === 2)
+    assert(entries.head.takeWhile(_ != ' ') === firstDir)
     // and a THIRD rehydration still sees exactly the committed state
     val s3 = new StreamingCharts.DurableRankingStore(spark, root)
     assert(s3.snapshot().count() === 2)
@@ -364,7 +371,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("a"), col("b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(allPairs.nonEmpty)
-    val fmt = new graft.etl.CommitLogTable(spark)
+    val fmt = new graft.etl.ManifestParquet(spark,
+      java.nio.file.Files.createTempDirectory("cluster_maint").toString)
     val in = MemoryStream[(Long, Long)]
     val q = graft.streaming.StreamingDedup.clusterMaintenance(
         in.toDF().toDF("a", "b"), fmt, "clusters")
@@ -494,7 +502,7 @@ class StreamingSpec extends SparkSpec {
     q.stop()
     // a FRESH driver's store over the same root sees the committed
     // ranked days and the batch ledger — the full foreachBatch →
-    // versioned-table path, not just appendOnce in isolation
+    // manifest-table path, not just appendOnce in isolation
     val rehydrated = new StreamingCharts.DurableRankingStore(spark, root)
     val day1 = rehydrated.snapshot()
       .where($"date".cast("string") === "2024-01-01")
@@ -648,7 +656,7 @@ class StreamingSpec extends SparkSpec {
     val evalDocs = docs.filter(_.doc_id % cfg.evalModulus == 0)
 
     def ledgerRows(root: String) =
-      CorpusEtl.DefaultBackend(spark, root).read("corpus_flags")
+      graft.etl.TableFormat.DefaultBackend(spark, root).read("corpus_flags")
         .select("doc_id", "n_tokens", "quality", "predicted", "is_eval",
           "is_exact_dup", "is_near_dup", "is_contaminated", "sampled_in", "kept")
         .orderBy("doc_id").collect().toSeq
@@ -681,7 +689,7 @@ class StreamingSpec extends SparkSpec {
       "micro-batch fold must be bit-equal to the daily batch fold")
     // the stream committed more (smaller) batches; the kept SET is
     // identical and the audit ledger's arithmetic still closes
-    val fmt = CorpusEtl.DefaultBackend(spark, streamRoot)
+    val fmt = graft.etl.TableFormat.DefaultBackend(spark, streamRoot)
     assert(fmt.read("corpus_flags").count() == docs.size)
   }
 
@@ -701,7 +709,7 @@ class StreamingSpec extends SparkSpec {
     in.addData(day: _*)
     q.processAllAvailable()
     q.stop()
-    val fmt = CorpusEtl.DefaultBackend(spark, root)
+    val fmt = graft.etl.TableFormat.DefaultBackend(spark, root)
     val n1 = fmt.read("corpus_flags").count()
     val v1 = fmt.currentVersion("corpus_flags")
 

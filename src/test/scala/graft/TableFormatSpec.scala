@@ -2,205 +2,198 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.etl.{CommitLogTable, ManifestParquet, TableFormat, VersionedParquet}
+import graft.etl.{ManifestParquet, TableFormat}
 
-/** MERGE-shaped contract for [[TableFormat]] — the behavior ANY
-  * backend must exhibit. The suite runs against BOTH shipped backends
-  * (versioned parquet's rename commit; the commit log's CAS commit),
-  * which is the proof the seam is pluggable: the merge semantics live
-  * on the trait, a backend only supplies read + arbitrated commit. */
+/** MERGE-shaped contract for [[TableFormat]], run against
+  * [[ManifestParquet]]: the merge semantics live on the trait, the
+  * format supplies read + arbitrated commit. Then the format's own
+  * guarantees: O(batch) commits, tombstones, statistics, CDC and
+  * vacuum. */
 class TableFormatSpec extends SparkSpec {
   import spark.implicits._
 
-  private val backends: Seq[(String, () => TableFormat)] = Seq(
-    "versioned-parquet" -> (() => new VersionedParquet(
-      spark, java.nio.file.Files.createTempDirectory("tfmt").toString)),
-    "commit-log" -> (() => new CommitLogTable(spark)),
-    "manifest-parquet" -> (() => new ManifestParquet(
-      spark, java.nio.file.Files.createTempDirectory("tfmt_m").toString)))
+  private def freshFormat(): ManifestParquet = new ManifestParquet(
+    spark, java.nio.file.Files.createTempDirectory("tfmt_m").toString)
 
   private def seed(fmt: TableFormat): Unit =
     fmt.overwrite("song",
       Seq(("I1", "One", "u1"), ("I2", "Two", "u2"))
         .toDF("isrc", "name", "url"))
 
-  for ((backend, freshFormat) <- backends) {
-
-    test(s"[$backend] mergeInsert: only non-conflicting rows land; RETURNING is exactly the inserted set") {
-      val fmt = freshFormat()
-      seed(fmt)
-      val batch = Seq(
-        ("I2", "Two-dup", "u2b", 1), // PK conflict with existing -> skipped
-        ("I3", "Three", "u3", 2),
-        ("I3", "Three-later", "u3b", 3), // within-batch dup, higher position loses
-        ("I4", "Four", "u1", 4)) // url conflicts with existing -> skipped
-        .toDF("isrc", "name", "url", "position")
-      val returned = fmt.mergeInsert("song", batch,
-        Seq(Seq("isrc"), Seq("url")), Seq(col("position").asc))
-      assert(rowsOf(returned.orderBy("isrc")) ==
-        Seq(Seq("I3", "Three", "u3")))
-      assert(rowsOf(fmt.read("song").orderBy("isrc")) == Seq(
-        Seq("I1", "One", "u1"),
-        Seq("I2", "Two", "u2"),
-        Seq("I3", "Three", "u3")))
-    }
-
-    test(s"[$backend] idempotence: re-merging the same batch inserts nothing and mints no version") {
-      val fmt = freshFormat()
-      seed(fmt)
-      val batch = Seq(("I3", "Three", "u3", 1)).toDF("isrc", "name", "url", "position")
-      fmt.mergeInsert("song", batch, Seq(Seq("isrc")), Seq(col("position").asc))
-      val vAfterFirst = fmt.currentVersion("song")
-      val second = fmt.mergeInsert("song", batch, Seq(Seq("isrc")), Seq(col("position").asc))
-      assert(second.isEmpty)
-      assert(fmt.currentVersion("song") == vAfterFirst,
-        "a no-op merge must not mint a version")
-    }
-
-    test(s"[$backend] mergeUpdateIfNull: fills only NULL targets, returns only changed rows") {
-      val fmt = freshFormat()
-      fmt.overwrite("song",
-        Seq(("I1", Option("keep")), ("I2", Option.empty[String]),
-          ("I3", Option.empty[String]))
-          .toDF("isrc", "apple_url"))
-      val updated = fmt.mergeUpdateIfNull("song",
-        Seq(("I1", "clobber"), ("I2", "filled")).toDF("isrc", "apple_url"),
-        "isrc", "apple_url")
-      assert(rowsOf(updated) == Seq(Seq("I2", "filled")))
-      assert(rowsOf(fmt.read("song").orderBy("isrc")) == Seq(
-        Seq("I1", "keep"), Seq("I2", "filled"), Seq("I3", null)))
-      // I3 untouched, nothing to update for it -> second call is a no-op
-      val v = fmt.currentVersion("song")
-      assert(fmt.mergeUpdateIfNull("song",
-        Seq(("I1", "clobber")).toDF("isrc", "apple_url"),
-        "isrc", "apple_url").isEmpty)
-      assert(fmt.currentVersion("song") == v)
-    }
-
-    test(s"[$backend] versions are immutable: a reader pinned pre-merge still sees its snapshot") {
-      val fmt = freshFormat()
-      seed(fmt)
-      val v1 = fmt.currentVersion("song")
-      val pinned = fmt.readVersion("song", v1)
-      fmt.mergeInsert("song",
-        Seq(("I9", "Nine", "u9", 1)).toDF("isrc", "name", "url", "position"),
-        Seq(Seq("isrc")), Seq(col("position").asc))
-      assert(fmt.currentVersion("song") == v1 + 1)
-      assert(pinned.count() == 2 && fmt.read("song").count() == 3)
-    }
-
-    test(s"[$backend] a racing committer is detected, not silently clobbered") {
-      val fmt = freshFormat()
-      seed(fmt)
-      // this writer's merge is based on v=1; a racer commits v=2 in the
-      // window before our commit lands — the commit on expectedBase=1
-      // must collide instead of dropping the racer's rows
-      fmt.overwrite("song",
-        Seq(("I8", "Racer", "u8")).toDF("isrc", "name", "url"))
-      val ex = intercept[IllegalStateException] {
-        fmt.tryCommit("song",
-          Seq(("I7", "Seven", "u7")).toDF("isrc", "name", "url"),
-          expectedBase = 1)
-      }
-      assert(ex.getMessage.contains("commit race"))
-      // the racer's committed state is untouched
-      assert(rowsOf(fmt.read("song")) == Seq(Seq("I8", "Racer", "u8")))
-    }
-
-    test(s"[$backend] RETURNING stays valid after the commit it preceded") {
-      val fmt = freshFormat()
-      seed(fmt)
-      val returned = fmt.mergeInsert("song",
-        Seq(("I5", "Five", "u5", 1)).toDF("isrc", "name", "url", "position"),
-        Seq(Seq("isrc")), Seq(col("position").asc))
-      // evaluate AFTER the commit — the lazy frame reads the version the
-      // anti-joins saw, which the format keeps immutable
-      assert(rowsOf(returned) == Seq(Seq("I5", "Five", "u5")))
-    }
-
-    test(s"[$backend] tryAppend: next version = pinned content + delta; pinned readers unmoved") {
-      val fmt = freshFormat()
-      seed(fmt) // v1: I1, I2
-      val v1 = fmt.currentVersion("song")
-      val v2 = fmt.tryAppend("song",
-        Seq(("I3", "Three", "u3")).toDF("isrc", "name", "url"), v1, v1)
-      assert(v2 == v1 + 1)
-      assert(rowsOf(fmt.read("song").orderBy("isrc")) == Seq(
-        Seq("I1", "One", "u1"), Seq("I2", "Two", "u2"), Seq("I3", "Three", "u3")))
-      assert(fmt.readVersion("song", v1).count() == 2)
-    }
-
-    test(s"[$backend] tryAppend supersedes an orphan version without absorbing its rows") {
-      val fmt = freshFormat()
-      seed(fmt) // v1 = pinned consistent state
-      val pinned = fmt.currentVersion("song")
-      // a crashed run left an orphan v2 no manifest references
-      fmt.tryCommit("song",
-        Seq(("IX", "Orphan", "ux")).toDF("isrc", "name", "url"), pinned)
-      val orphanTop = fmt.currentVersion("song")
-      // the next healthy run reads PINNED, commits on top of CURRENT:
-      // content = pinned ∪ delta — the orphan's rows must not leak in
-      val v3 = fmt.tryAppend("song",
-        Seq(("I3", "Three", "u3")).toDF("isrc", "name", "url"),
-        pinned, orphanTop)
-      assert(v3 == orphanTop + 1)
-      assert(rowsOf(fmt.readVersion("song", v3).orderBy("isrc")) == Seq(
-        Seq("I1", "One", "u1"), Seq("I2", "Two", "u2"), Seq("I3", "Three", "u3")))
-    }
-
-    test(s"[$backend] a racing tryAppend collides instead of silently losing a day") {
-      val fmt = freshFormat()
-      seed(fmt)
-      val base = fmt.currentVersion("song")
-      fmt.tryAppend("song",
-        Seq(("I3", "Winner", "u3")).toDF("isrc", "name", "url"), base, base)
-      val ex = intercept[IllegalStateException] {
-        fmt.tryAppend("song",
-          Seq(("I4", "Loser", "u4")).toDF("isrc", "name", "url"), base, base)
-      }
-      assert(ex.getMessage.contains("commit race"))
-      assert(fmt.read("song").where(col("name") === "Winner").count() == 1)
-    }
-
-    test(s"[$backend] tryDeleteRows removes exactly the keyed rows; pinned readers unmoved") {
-      val fmt = freshFormat()
-      seed(fmt) // I1, I2
-      val v1 = fmt.currentVersion("song")
-      val v2 = fmt.tryDeleteRows("song",
-        Seq("I1", "I9").toDF("isrc"), v1, v1) // I9 absent: deleting it is a no-op
-      assert(v2 == v1 + 1)
-      assert(rowsOf(fmt.read("song")) == Seq(Seq("I2", "Two", "u2")))
-      assert(fmt.readVersion("song", v1).count() == 2,
-        "the pre-delete version must still show the erased row")
-    }
-
-    test(s"[$backend] a key re-appended after its delete is NOT re-deleted") {
-      val fmt = freshFormat()
-      seed(fmt) // I1, I2
-      val v1 = fmt.currentVersion("song")
-      val v2 = fmt.tryDeleteRows("song", Seq("I1").toDF("isrc"), v1, v1)
-      val v3 = fmt.tryAppend("song",
-        Seq(("I1", "One-again", "u1b")).toDF("isrc", "name", "url"), v2, v2)
-      assert(rowsOf(fmt.readVersion("song", v3).orderBy("isrc")) == Seq(
-        Seq("I1", "One-again", "u1b"), Seq("I2", "Two", "u2")),
-        "erasure applies to history, not to a fresh re-arrival of the key")
-    }
-
-    test(s"[$backend] a racing tryDeleteRows collides instead of silently clobbering") {
-      val fmt = freshFormat()
-      seed(fmt)
-      val base = fmt.currentVersion("song")
-      fmt.tryAppend("song",
-        Seq(("I3", "Racer", "u3")).toDF("isrc", "name", "url"), base, base)
-      val ex = intercept[IllegalStateException] {
-        fmt.tryDeleteRows("song", Seq("I1").toDF("isrc"), base, base)
-      }
-      assert(ex.getMessage.contains("commit race"))
-      assert(fmt.read("song").count() == 3)
-    }
+  test("[manifest-parquet] mergeInsert: only non-conflicting rows land; RETURNING is exactly the inserted set") {
+    val fmt = freshFormat()
+    seed(fmt)
+    val batch = Seq(
+      ("I2", "Two-dup", "u2b", 1), // PK conflict with existing -> skipped
+      ("I3", "Three", "u3", 2),
+      ("I3", "Three-later", "u3b", 3), // within-batch dup, higher position loses
+      ("I4", "Four", "u1", 4)) // url conflicts with existing -> skipped
+      .toDF("isrc", "name", "url", "position")
+    val returned = fmt.mergeInsert("song", batch,
+      Seq(Seq("isrc"), Seq("url")), Seq(col("position").asc))
+    assert(rowsOf(returned.orderBy("isrc")) ==
+      Seq(Seq("I3", "Three", "u3")))
+    assert(rowsOf(fmt.read("song").orderBy("isrc")) == Seq(
+      Seq("I1", "One", "u1"),
+      Seq("I2", "Two", "u2"),
+      Seq("I3", "Three", "u3")))
   }
 
-  // ---- manifest-parquet-specific: the O(batch) commit guarantee ----
+  test("[manifest-parquet] idempotence: re-merging the same batch inserts nothing and mints no version") {
+    val fmt = freshFormat()
+    seed(fmt)
+    val batch = Seq(("I3", "Three", "u3", 1)).toDF("isrc", "name", "url", "position")
+    fmt.mergeInsert("song", batch, Seq(Seq("isrc")), Seq(col("position").asc))
+    val vAfterFirst = fmt.currentVersion("song")
+    val second = fmt.mergeInsert("song", batch, Seq(Seq("isrc")), Seq(col("position").asc))
+    assert(second.isEmpty)
+    assert(fmt.currentVersion("song") == vAfterFirst,
+      "a no-op merge must not mint a version")
+  }
+
+  test("[manifest-parquet] mergeUpdateIfNull: fills only NULL targets, returns only changed rows") {
+    val fmt = freshFormat()
+    fmt.overwrite("song",
+      Seq(("I1", Option("keep")), ("I2", Option.empty[String]),
+        ("I3", Option.empty[String]))
+        .toDF("isrc", "apple_url"))
+    val updated = fmt.mergeUpdateIfNull("song",
+      Seq(("I1", "clobber"), ("I2", "filled")).toDF("isrc", "apple_url"),
+      "isrc", "apple_url")
+    assert(rowsOf(updated) == Seq(Seq("I2", "filled")))
+    assert(rowsOf(fmt.read("song").orderBy("isrc")) == Seq(
+      Seq("I1", "keep"), Seq("I2", "filled"), Seq("I3", null)))
+    // I3 untouched, nothing to update for it -> second call is a no-op
+    val v = fmt.currentVersion("song")
+    assert(fmt.mergeUpdateIfNull("song",
+      Seq(("I1", "clobber")).toDF("isrc", "apple_url"),
+      "isrc", "apple_url").isEmpty)
+    assert(fmt.currentVersion("song") == v)
+  }
+
+  test("[manifest-parquet] versions are immutable: a reader pinned pre-merge still sees its snapshot") {
+    val fmt = freshFormat()
+    seed(fmt)
+    val v1 = fmt.currentVersion("song")
+    val pinned = fmt.readVersion("song", v1)
+    fmt.mergeInsert("song",
+      Seq(("I9", "Nine", "u9", 1)).toDF("isrc", "name", "url", "position"),
+      Seq(Seq("isrc")), Seq(col("position").asc))
+    assert(fmt.currentVersion("song") == v1 + 1)
+    assert(pinned.count() == 2 && fmt.read("song").count() == 3)
+  }
+
+  test("[manifest-parquet] a racing committer is detected, not silently clobbered") {
+    val fmt = freshFormat()
+    seed(fmt)
+    // this writer's merge is based on v=1; a racer commits v=2 in the
+    // window before our commit lands — the commit on expectedBase=1
+    // must collide instead of dropping the racer's rows
+    fmt.overwrite("song",
+      Seq(("I8", "Racer", "u8")).toDF("isrc", "name", "url"))
+    val ex = intercept[IllegalStateException] {
+      fmt.tryCommit("song",
+        Seq(("I7", "Seven", "u7")).toDF("isrc", "name", "url"),
+        expectedBase = 1)
+    }
+    assert(ex.getMessage.contains("commit race"))
+    // the racer's committed state is untouched
+    assert(rowsOf(fmt.read("song")) == Seq(Seq("I8", "Racer", "u8")))
+  }
+
+  test("[manifest-parquet] RETURNING stays valid after the commit it preceded") {
+    val fmt = freshFormat()
+    seed(fmt)
+    val returned = fmt.mergeInsert("song",
+      Seq(("I5", "Five", "u5", 1)).toDF("isrc", "name", "url", "position"),
+      Seq(Seq("isrc")), Seq(col("position").asc))
+    // evaluate AFTER the commit — the lazy frame reads the version the
+    // anti-joins saw, which the format keeps immutable
+    assert(rowsOf(returned) == Seq(Seq("I5", "Five", "u5")))
+  }
+
+  test("[manifest-parquet] tryAppend: next version = pinned content + delta; pinned readers unmoved") {
+    val fmt = freshFormat()
+    seed(fmt) // v1: I1, I2
+    val v1 = fmt.currentVersion("song")
+    val v2 = fmt.tryAppend("song",
+      Seq(("I3", "Three", "u3")).toDF("isrc", "name", "url"), v1, v1)
+    assert(v2 == v1 + 1)
+    assert(rowsOf(fmt.read("song").orderBy("isrc")) == Seq(
+      Seq("I1", "One", "u1"), Seq("I2", "Two", "u2"), Seq("I3", "Three", "u3")))
+    assert(fmt.readVersion("song", v1).count() == 2)
+  }
+
+  test("[manifest-parquet] tryAppend supersedes an orphan version without absorbing its rows") {
+    val fmt = freshFormat()
+    seed(fmt) // v1 = pinned consistent state
+    val pinned = fmt.currentVersion("song")
+    // a crashed run left an orphan v2 no manifest references
+    fmt.tryCommit("song",
+      Seq(("IX", "Orphan", "ux")).toDF("isrc", "name", "url"), pinned)
+    val orphanTop = fmt.currentVersion("song")
+    // the next healthy run reads PINNED, commits on top of CURRENT:
+    // content = pinned ∪ delta — the orphan's rows must not leak in
+    val v3 = fmt.tryAppend("song",
+      Seq(("I3", "Three", "u3")).toDF("isrc", "name", "url"),
+      pinned, orphanTop)
+    assert(v3 == orphanTop + 1)
+    assert(rowsOf(fmt.readVersion("song", v3).orderBy("isrc")) == Seq(
+      Seq("I1", "One", "u1"), Seq("I2", "Two", "u2"), Seq("I3", "Three", "u3")))
+  }
+
+  test("[manifest-parquet] a racing tryAppend collides instead of silently losing a day") {
+    val fmt = freshFormat()
+    seed(fmt)
+    val base = fmt.currentVersion("song")
+    fmt.tryAppend("song",
+      Seq(("I3", "Winner", "u3")).toDF("isrc", "name", "url"), base, base)
+    val ex = intercept[IllegalStateException] {
+      fmt.tryAppend("song",
+        Seq(("I4", "Loser", "u4")).toDF("isrc", "name", "url"), base, base)
+    }
+    assert(ex.getMessage.contains("commit race"))
+    assert(fmt.read("song").where(col("name") === "Winner").count() == 1)
+  }
+
+  test("[manifest-parquet] tryDeleteRows removes exactly the keyed rows; pinned readers unmoved") {
+    val fmt = freshFormat()
+    seed(fmt) // I1, I2
+    val v1 = fmt.currentVersion("song")
+    val v2 = fmt.tryDeleteRows("song",
+      Seq("I1", "I9").toDF("isrc"), v1, v1) // I9 absent: deleting it is a no-op
+    assert(v2 == v1 + 1)
+    assert(rowsOf(fmt.read("song")) == Seq(Seq("I2", "Two", "u2")))
+    assert(fmt.readVersion("song", v1).count() == 2,
+      "the pre-delete version must still show the erased row")
+  }
+
+  test("[manifest-parquet] a key re-appended after its delete is NOT re-deleted") {
+    val fmt = freshFormat()
+    seed(fmt) // I1, I2
+    val v1 = fmt.currentVersion("song")
+    val v2 = fmt.tryDeleteRows("song", Seq("I1").toDF("isrc"), v1, v1)
+    val v3 = fmt.tryAppend("song",
+      Seq(("I1", "One-again", "u1b")).toDF("isrc", "name", "url"), v2, v2)
+    assert(rowsOf(fmt.readVersion("song", v3).orderBy("isrc")) == Seq(
+      Seq("I1", "One-again", "u1b"), Seq("I2", "Two", "u2")),
+      "erasure applies to history, not to a fresh re-arrival of the key")
+  }
+
+  test("[manifest-parquet] a racing tryDeleteRows collides instead of silently clobbering") {
+    val fmt = freshFormat()
+    seed(fmt)
+    val base = fmt.currentVersion("song")
+    fmt.tryAppend("song",
+      Seq(("I3", "Racer", "u3")).toDF("isrc", "name", "url"), base, base)
+    val ex = intercept[IllegalStateException] {
+      fmt.tryDeleteRows("song", Seq("I1").toDF("isrc"), base, base)
+    }
+    assert(ex.getMessage.contains("commit race"))
+    assert(fmt.read("song").count() == 3)
+  }
+
+  // ---- the O(batch) commit guarantee ----
 
   private def dataBytes(root: String): Long =
     graft.etl.Compaction.dataBytes(spark, root)
@@ -347,18 +340,6 @@ class TableFormatSpec extends SparkSpec {
       "an aged-out unreferenced orphan must be reclaimed")
   }
 
-  test("[versioned-parquet] vacuum drops version dirs below the watermark") {
-    val root = java.nio.file.Files.createTempDirectory("tfmt_vacv").toString
-    val fmt = new VersionedParquet(spark, root)
-    fmt.overwrite("t", spark.range(10).toDF("id"))
-    fmt.overwrite("t", spark.range(20).toDF("id"))
-    fmt.overwrite("t", spark.range(30).toDF("id"))
-    val stats = fmt.vacuum("t", 3)
-    assert(stats.manifestsDeleted == 2 && stats.bytesDeleted > 0)
-    assert(fmt.read("t").count() == 30)
-    intercept[Exception] { fmt.readVersion("t", 1).collect() }
-  }
-
   test("[manifest-parquet] an empty version reads back with its schema, no inference") {
     val root = java.nio.file.Files.createTempDirectory("tfmt_empty").toString
     val fmt = new ManifestParquet(spark, root)
@@ -369,29 +350,28 @@ class TableFormatSpec extends SparkSpec {
 
   // ---- commit statistics: data skipping + stats-only bounds ----
 
-  for ((backend, freshFormat) <- backends)
-    test(s"[$backend] readVersionRange is exactly readVersion().where() — point, open-ended, strings, nulls") {
-      val fmt = freshFormat()
-      fmt.overwrite("evt",
-        Seq((1L, Option("alpha"), 10), (2L, Option.empty[String], 20),
-          (3L, Option("charlie"), 30), (4L, Option("delta"), 40))
-          .toDF("id", "tag", "v"))
-      val v = fmt.currentVersion("evt")
-      def same(got: org.apache.spark.sql.DataFrame,
-          want: org.apache.spark.sql.DataFrame): Unit =
-        assert(rowsOf(got.orderBy("id")) == rowsOf(want.orderBy("id")))
-      val full = fmt.readVersion("evt", v)
-      same(fmt.readVersionRange("evt", v, "id", Some(2L), Some(3L)),
-        full.where($"id" >= 2 && $"id" <= 3))
-      same(fmt.readVersionRange("evt", v, "id", Some(3L), None),
-        full.where($"id" >= 3))
-      same(fmt.readVersionRange("evt", v, "id", None, Some(1L)),
-        full.where($"id" <= 1))
-      same(fmt.readVersionRange("evt", v, "id", None, None), full)
-      // range on a null-bearing string column: null never matches
-      same(fmt.readVersionRange("evt", v, "tag", Some("alpha"), Some("charlie")),
-        full.where($"tag" >= "alpha" && $"tag" <= "charlie"))
-    }
+  test("[manifest-parquet] readVersionRange is exactly readVersion().where() — point, open-ended, strings, nulls") {
+    val fmt = freshFormat()
+    fmt.overwrite("evt",
+      Seq((1L, Option("alpha"), 10), (2L, Option.empty[String], 20),
+        (3L, Option("charlie"), 30), (4L, Option("delta"), 40))
+        .toDF("id", "tag", "v"))
+    val v = fmt.currentVersion("evt")
+    def same(got: org.apache.spark.sql.DataFrame,
+        want: org.apache.spark.sql.DataFrame): Unit =
+      assert(rowsOf(got.orderBy("id")) == rowsOf(want.orderBy("id")))
+    val full = fmt.readVersion("evt", v)
+    same(fmt.readVersionRange("evt", v, "id", Some(2L), Some(3L)),
+      full.where($"id" >= 2 && $"id" <= 3))
+    same(fmt.readVersionRange("evt", v, "id", Some(3L), None),
+      full.where($"id" >= 3))
+    same(fmt.readVersionRange("evt", v, "id", None, Some(1L)),
+      full.where($"id" <= 1))
+    same(fmt.readVersionRange("evt", v, "id", None, None), full)
+    // range on a null-bearing string column: null never matches
+    same(fmt.readVersionRange("evt", v, "tag", Some("alpha"), Some("charlie")),
+      full.where($"tag" >= "alpha" && $"tag" <= "charlie"))
+  }
 
   private def scannedDirs(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.inputFiles.map(f => f.split('/').dropRight(1).last).toSet
