@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import graft.operators.CheckpointBlocks
 object Bench {
@@ -539,7 +540,9 @@ object Bench {
     // the r12 verdict's top contract item). The FINAL printed line is
     // therefore a COMPACT summary, built below, guaranteed to fit the
     // archived tail: same `value`/methodology, top-25 per-query mins.
-    println(s"""{"metric":"total_full","unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_done":$repsDone,"budget_s":${r3(budgetS)},"agg":"min","interleaved":true,"events_ts":"$eventsTsKind","tables":$tablesField,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,$perStage,"ckpt_freed":${CheckpointBlocks.scopeFreed.get},"staged_sec":${r3(staged)},"staged_ttstore_sec":${r3(ttStoreSec)},"staged_cold_sec":${r3(stagedColdSec)},"staged_warm_sec":${r3(stagedWarmSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},"staged_warm_sample_sec":${r3(warmSampleSec)},$warmArtifactField"corpus_day_setup":"eval%${graft.text.Curation.Config().evalModulus}|30/10",$corpusSkipField"corpus_day_sec":${r3(corpusDaySec)},$retimedField$spreadField"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},$errField"value":${r3(total)}}""")
+    // `codegen_compiles` counts the generated classes this JVM compiled
+    // (each one a Janino compile, none served from Spark's class cache).
+    println(s"""{"metric":"total_full","unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"reps_done":$repsDone,"budget_s":${r3(budgetS)},"agg":"min","interleaved":true,"events_ts":"$eventsTsKind","tables":$tablesField,$canaryField"warehouse":"$warehouseMode","staged_builds":$stagedBuilds,$perStage,"ckpt_freed":${CheckpointBlocks.scopeFreed.get},"codegen_compiles":${CodegenMetrics.METRIC_COMPILATION_TIME.getCount},"staged_sec":${r3(staged)},"staged_ttstore_sec":${r3(ttStoreSec)},"staged_cold_sec":${r3(stagedColdSec)},"staged_warm_sec":${r3(stagedWarmSec)},"staged_cold_sample_sec":${r3(coldSampleSec)},"staged_warm_sample_sec":${r3(warmSampleSec)},$warmArtifactField"corpus_day_setup":"eval%${graft.text.Curation.Config().evalModulus}|30/10",$corpusSkipField"corpus_day_sec":${r3(corpusDaySec)},$retimedField$spreadField"spread_max":${r3(spreadMax)},"median_total":${r3(medianTotal)},"elapsed_s":${r3(elapsedS)},$errField"value":${r3(total)}}""")
     // COMPACT final line — the driver's artifact. Budget: 2000-char
     // archived tail minus ~120 chars of sbt epilogue ("[success]
     // Total time: …") minus the tail-end fragment of the full line

@@ -4,7 +4,9 @@ import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.CodegenObjectFactoryMode
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.etl.{Load, ManifestStore, TableFormat}
 import graft.ingest.Sources
@@ -43,7 +45,10 @@ import graft.report.Render
   * All parsing and loading is Spark-side: the same `run` composition
   * scales from the reference's 10 songs/day to a backfill of every
   * chart page ever archived — only the driver-side fetch loop is
-  * per-day work.
+  * per-day work. The day itself runs interpreted (see [[run]]),
+  * which is sized for the daily bound, not for a backfill: a
+  * multi-year replay that keeps far more than a year of rankings
+  * belongs on compiled code.
   */
 object DailyEtl {
 
@@ -97,10 +102,14 @@ object DailyEtl {
     val base = store.base
     if (base > 0) {
       val pinned = store.pinned(base)
-      def tbl(n: String) = store.readPinned(pinned, n)
-      (MusicDb(tbl("artist"), tbl("song"), tbl("artist_song_map"), tbl("ranking")),
-        base, pinned)
+      (dbAt(fmt, pinned), base, pinned)
     } else (emptyDb(spark), base, Map.empty) // day 1: nothing committed yet
+  }
+
+  /** The four tables at the versions `pins` names. */
+  private def dbAt(fmt: TableFormat, pins: Map[String, Long]): MusicDb = {
+    def tbl(n: String) = fmt.readVersion(n, pins(n))
+    MusicDb(tbl("artist"), tbl("song"), tbl("artist_song_map"), tbl("ranking"))
   }
 
   /** Commit the day. The common day is PURE APPEND — nothing fired
@@ -114,16 +123,17 @@ object DailyEtl {
     * scaladoc describes); a day with S10 fills rewrites only the song
     * table. The manifest pins exactly the versions these commits
     * RETURN — never a re-listed currentVersion, which could observe a
-    * concurrent writer's orphan (ManifestStore invariant 2). */
+    * concurrent writer's orphan (ManifestStore invariant 2).
+    *
+    * @return the (table → version) map the new manifest pins */
   private def persist(spark: SparkSession, fmt: TableFormat, res: Load.LoadResult,
-      pinned: Map[String, Long], manifestBase: Long,
-      retentionFired: Boolean): Unit = {
+      pinned: Map[String, Long], manifestBase: Long): Map[String, Long] = {
     def full(n: String, df: DataFrame) =
       n -> fmt.tryCommit(n, df, fmt.currentVersion(n))
     def append(n: String, delta: DataFrame) =
       n -> fmt.tryAppend(n, delta, pinned.getOrElse(n, 0L), fmt.currentVersion(n))
-    val versions: Seq[(String, Long)] =
-      if (retentionFired)
+    val versions: Map[String, Long] = (
+      if (res.retentionFired)
         tableNames.zip(Seq(res.db.artist, res.db.song, res.db.artistSongMap, res.db.ranking))
           .map { case (n, df) => full(n, df) }
       else Seq(
@@ -131,8 +141,9 @@ object DailyEtl {
         if (res.updatedSongs.isEmpty) append("song", res.insertedSongs)
         else full("song", res.db.song),
         append("artist_song_map", res.insertedMaps),
-        append("ranking", res.insertedRankings))
-    storeOf(spark, fmt).commit(versions.toMap, manifestBase)
+        append("ranking", res.insertedRankings))).toMap
+    storeOf(spark, fmt).commit(versions, manifestBase)
+    versions
   }
 
   /** One daily run, fetcher-injected (specs pass [[Sources
@@ -141,10 +152,49 @@ object DailyEtl {
     * Its frames read the load's checkpoints, which belong to the
     * caller's innermost open [[graft.operators.CheckpointBlocks.scoped]]
     * block (Spark's ContextCleaner reclaims them when none is open):
-    * `run` opens no scope of its own, so the result stays readable. */
+    * `run` opens no scope of its own, so the result stays readable.
+    *
+    * The day runs on Spark's interpreted evaluators: for its length,
+    * whole-stage codegen is off and the expression factory mode is
+    * `NO_CODEGEN` on the caller's session; both confs are restored
+    * when `run` returns or throws. The day is bounded twice over: the
+    * batch is the top `topN` of one playlist page, and X5 retention
+    * keeps the store at about topN × sources × 366 ranking rows. At
+    * that size compiling each operator costs more than it saves: on
+    * 4 cores, a cold day over 13 months of history compiled 290
+    * generated classes, about 4 s of a 15 s day; interpreted it
+    * compiles 10 (under 0.2 s) and takes about 10 s.
+    * The confs are set on the caller's session rather than a child
+    * session, so the result's frames stay in the caller's session and
+    * its query listeners see the day's queries. Other queries running
+    * on that session while `run` is inside its day run interpreted
+    * too. */
   def run(spark: SparkSession, fetcher: Sources.Fetcher, cfg: Config,
       bearerToken: Option[String] = None,
-      backend: TableFormat.Backend = TableFormat.DefaultBackend): Load.LoadResult = {
+      backend: TableFormat.Backend = TableFormat.DefaultBackend): Load.LoadResult =
+    interpreted(spark)(day(spark, fetcher, cfg, bearerToken, backend))
+
+  /** The confs that turn generated-code compilation off, named
+    * through Spark's own constants, so a rename in Spark breaks the
+    * build instead of silently compiling again. */
+  private val interpretedConfs = Seq(
+    SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key -> "false",
+    SQLConf.CODEGEN_FACTORY_MODE.key -> CodegenObjectFactoryMode.NO_CODEGEN.toString)
+
+  /** Runs `body` with [[interpretedConfs]] set on `spark`, then puts
+    * back each key's previous value, unsetting a key that was unset. */
+  private def interpreted[T](spark: SparkSession)(body: => T): T = {
+    val saved = interpretedConfs.map { case (k, _) => k -> spark.conf.getAll.get(k) }
+    interpretedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def day(spark: SparkSession, fetcher: Sources.Fetcher, cfg: Config,
+      bearerToken: Option[String], backend: TableFormat.Backend): Load.LoadResult = {
     import spark.implicits._
 
     // 1. playlist page → top-N song URLs, order carried explicitly
@@ -194,17 +244,7 @@ object DailyEtl {
     if (nDocs != cfg.topN)
       throw new SongDataNotFoundError(
         s"Ranking data is missing: track lookup returned $nDocs of ${cfg.topN} songs.")
-    // X5 fires iff the PINNED fact table already holds rows at or
-    // past the horizon (today's inserts can't be a year old) — the
-    // same predicate Maintenance.retention applies. The range read
-    // answers it from manifest stats on the common day: every daily
-    // dir's min date is above the horizon, so the probe plans over
-    // ZERO files instead of date-filtering a year of appends
-    val retentionFired = manifestBase > 0 && !fmt
-      .readVersionRange("ranking", pinned("ranking"), "ranking_date",
-        None, Some(java.sql.Date.valueOf(cfg.date.minusMonths(12))))
-      .isEmpty
-    persist(spark, fmt, res, pinned, manifestBase, retentionFired)
+    val pins = persist(spark, fmt, res, pinned, manifestBase)
 
     // 4. S11 CSV append sinks: the four RETURNING sets, ranking with
     //    the snapshot-derived ranking_id export column
@@ -221,13 +261,13 @@ object DailyEtl {
     }
 
     // 5. render from the COMMITTED store, exactly as the reference's
-    //    separate render job queries the database after the load. The
-    //    ranking read is range-pruned to the only two chart dates the
-    //    render can reference — O(day), not O(history), against a
-    //    backfilled archive
-    val (committedDb, _, committedPins) = loadDb(spark, fmt)
+    //    separate render job queries the database after the load: the
+    //    versions the manifest now pins are the ones persist returned
+    //    (ManifestStore invariant 2). The ranking read is range-pruned
+    //    to the only two chart dates the render can reference — O(day),
+    //    not O(history), against a backfilled archive
     val md = Render.renderForDate(
-      renderDbOf(fmt, committedPins, committedDb, cfg.date), cfg.date)
+      renderDbOf(fmt, pins, dbAt(fmt, pins), cfg.date), cfg.date)
     Files.write(Paths.get(cfg.renderPath), md.getBytes("UTF-8"))
     res
   }

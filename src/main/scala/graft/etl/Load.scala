@@ -131,7 +131,9 @@ object Load {
     * already present that gained an apple_music_url this batch; also
     * how [[graft.DailyEtl]] knows a day is NOT pure-append and must
     * commit the song table as a rewrite). `docs` is the batch as
-    * loaded. Every frame reads [[loadBatch]]'s checkpoints. */
+    * loaded. `retentionFired` says the X5 cascade deleted rows, so
+    * `db` is a rewrite of the loaded state, not an append to it.
+    * Every frame reads [[loadBatch]]'s checkpoints. */
   final case class LoadResult(
       db: MusicDb,
       insertedArtists: DataFrame,
@@ -139,7 +141,8 @@ object Load {
       updatedSongs: DataFrame,
       insertedMaps: DataFrame,
       insertedRankings: DataFrame,
-      docs: DataFrame)
+      docs: DataFrame,
+      retentionFired: Boolean)
 
   /** Full daily load (reference `main()` stages 1-2,
     * `etl_pipeline.py:1003-1022`): dims first, then bridge + fact —
@@ -205,10 +208,11 @@ object Load {
       Seq(col("ranking_source").asc, col("rank").asc))
 
     // AFTER INSERT retention trigger X5 fires on the fact table
-    val retained = Maintenance.retention(
-      MusicDb(newArtist, newSong, newMap, newRank), today)
+    val loaded = MusicDb(newArtist, newSong, newMap, newRank)
+    val retained = Maintenance.retention(loaded, today)
 
-    LoadResult(retained, insArtist, insSong, updSong, insMap, insRank, batch)
+    LoadResult(retained.getOrElse(loaded), insArtist, insSong, updSong, insMap, insRank,
+      batch, retentionFired = retained.isDefined)
   }
 
   /** [[upsert]] executed once: (the checkpointed RETURNING set,

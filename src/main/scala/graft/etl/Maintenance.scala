@@ -34,13 +34,15 @@ object Maintenance {
     * partitioned by ranking_date, so this is a partition drop, not a
     * rewrite. The kept rankings are the complementary filter, which
     * is what [[deleteRankings]]' `exceptAll` leaves when the delete
-    * set is a filter of the table itself. A day with nothing aged
-    * deletes nothing, so it returns `db` without running the cascade. */
-  def retention(db: MusicDb, newDate: Date): MusicDb = {
+    * set is a filter of the table itself.
+    *
+    * @return the retained state, or None when nothing is aged: such a
+    *   day deletes nothing, so the cascade does not run */
+  def retention(db: MusicDb, newDate: Date): Option[MusicDb] = {
     val aged = coalesce(col("ranking_date") <= add_months(lit(newDate), -12), lit(false))
     val deleted = db.ranking.where(aged)
-    if (deleted.isEmpty) db
-    else cascade(db, deleted, db.ranking.where(!aged))
+    if (deleted.isEmpty) None
+    else Some(cascade(db, deleted, db.ranking.where(!aged)))
   }
 
   /** Apply a ranking delete-set plus the full trigger cascade. */

@@ -88,6 +88,54 @@ class DailyEtlSpec extends SparkSpec {
     assert(mdAgain === md)
   }
 
+  test("the day runs interpreted: no whole-stage codegen in its plans, the caller's confs restored") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.internal.SQLConf
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val wholeStage = SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key
+    val factoryMode = SQLConf.CODEGEN_FACTORY_MODE.key
+    def confs = (spark.conf.getAll.get(wholeStage), spark.conf.getAll.get(factoryMode))
+    val dir = Files.createTempDirectory("dailyetl_interpreted")
+    val fetcher = new Sources.FileFetcher(Map.empty)
+    val ids = (1 to 10).map(i => s"t$i")
+    def cfg(n: Int, idsN: Seq[String]) = DailyEtl.Config(
+      s"$dir/store", LocalDate.of(2026, 2, 1),
+      write(java.nio.file.Paths.get(s"$dir/p$n.html"), playlistHtml(idsN)),
+      write(java.nio.file.Paths.get(s"$dir/t$n.json"), tracksJson(idsN)),
+      s"$dir/README.md", Some(s"$dir/csv"))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val shared = Seq(wholeStage, factoryMode).map(k => k -> spark.conf.getAll.get(k))
+    spark.conf.set(wholeStage, "true") // the caller set this one
+    spark.conf.unset(factoryMode) // and never set this one
+    try {
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      spark.listenerManager.register(listener)
+      try {
+        DailyEtl.run(spark, fetcher, cfg(1, ids))
+        org.apache.spark.ListenerDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      assert(confs == (Some("true"), None), "a normal day must restore the caller's confs")
+      val helper = new AdaptiveSparkPlanHelper {}
+      val compiled = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .filter(p => helper.collectWithSubqueries(p) { case w: WholeStageCodegenExec => w }.nonEmpty)
+      assert(plans.size > 10, s"the listener saw ${plans.size} queries")
+      assert(compiled.isEmpty, s"whole-stage codegen ran in the day:\n${compiled.take(1).mkString}")
+
+      intercept[DailyEtl.SongDataNotFoundError](
+        DailyEtl.run(spark, fetcher, cfg(2, ids.take(9))))
+      assert(confs == (Some("true"), None), "an aborted day must restore the caller's confs")
+    } finally shared.foreach { // other suites share this session
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("a short chart aborts the run before anything is loaded") {
     val dir = Files.createTempDirectory("dailyetl_short")
     val store = s"$dir/store"
@@ -275,12 +323,14 @@ class DailyEtlSpec extends SparkSpec {
       write(java.nio.file.Paths.get(s"$dir/p$n.html"), playlistHtml(idsN)),
       write(java.nio.file.Paths.get(s"$dir/t$n.json"), tracksJson(idsN)),
       s"$dir/README.md", Some(csv))
-    DailyEtl.run(spark, fetcher, cfg(1, LocalDate.of(2025, 1, 1), ids1))
+    val r1 = DailyEtl.run(spark, fetcher, cfg(1, LocalDate.of(2025, 1, 1), ids1))
+    assert(!r1.retentionFired)
     // 13 months later: the same chart again — day-1 rankings are past
     // the horizon; the songs survive (they rank today), so only the
     // fact rows age out
     val r2 = assertSinksMatchStore(store, csv)(
       DailyEtl.run(spark, fetcher, cfg(2, LocalDate.of(2026, 2, 1), ids1)))
+    assert(r2.retentionFired)
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val fmt = graft.etl.TableFormat.DefaultBackend(spark, store)
@@ -292,7 +342,7 @@ class DailyEtlSpec extends SparkSpec {
     // a third, ordinary day on the rewritten store appends again
     val r3 = assertSinksMatchStore(store, csv)(
       DailyEtl.run(spark, fetcher, cfg(3, LocalDate.of(2026, 2, 2), ids1.drop(1) :+ "t99")))
-    assert(r3.insertedSongs.count() == 1)
+    assert(r3.insertedSongs.count() == 1 && !r3.retentionFired)
     assert(fmt.read("ranking").count() == 20)
   }
 

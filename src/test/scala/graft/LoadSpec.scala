@@ -194,7 +194,7 @@ class LoadSpec extends SparkSpec {
         ("I1", d("2025-01-02"), 1, "Spotify"), // exactly new-1yr: deleted (<=)
         ("I2", d("2025-01-03"), 2, "Spotify")) // newer: kept
         .toDF("isrc", "ranking_date", "rank", "ranking_source"))
-    val out = Maintenance.retention(db, d("2026-01-02"))
+    val out = Maintenance.retention(db, d("2026-01-02")).get
     assert(out.ranking.select("isrc").as[String].collect().toSeq == Seq("I2"))
     // cascade: I1's song deleted, its map row cascaded, artist kept (still maps I2)
     assert(out.song.select("isrc").as[String].collect().toSeq == Seq("I2"))
