@@ -12,6 +12,7 @@ import graft.etl.{Load, ManifestStore, TableFormat}
 import graft.ingest.Sources
 import graft.model.Music
 import graft.model.Music.MusicDb
+import graft.operators.Wave
 import graft.report.Render
 
 /** The runnable daily pipeline — the engine's analog of the
@@ -22,8 +23,9 @@ import graft.report.Render
   * seam (S9/J7, with the X5 retention stage riding the load; the
   * default manifest-log backend makes a pure-append day cost O(batch)
   * bytes — see [[persist]]), append the four RETURNING
-  * sets to CSVs (S11), and re-render the README from the delta view
-  * (W1/F6-F11).
+  * sets to CSVs (S11, written from the driver by [[Load.appendCsv]]),
+  * and re-render the README from the delta view (W1/F6-F11).
+  * Independent steps of the day run concurrently (see [[run]]).
   *
   * Usage:
   * {{{
@@ -125,14 +127,22 @@ object DailyEtl {
     * RETURN — never a re-listed currentVersion, which could observe a
     * concurrent writer's orphan (ManifestStore invariant 2).
     *
+    * The four table commits are independent (each stages its own
+    * dirs and publishes its own table's next version), so they run as
+    * one [[graft.operators.Wave]]. The manifest commits after all four
+    * have returned, and only if all four succeeded: a failure in any
+    * of them rethrows once the others have finished, with nothing
+    * published but orphan table versions the old manifest never
+    * names, so the next run reads the previous state.
+    *
     * @return the (table → version) map the new manifest pins */
   private def persist(spark: SparkSession, fmt: TableFormat, res: Load.LoadResult,
       pinned: Map[String, Long], manifestBase: Long): Map[String, Long] = {
     def full(n: String, df: DataFrame) =
-      n -> fmt.tryCommit(n, df, fmt.currentVersion(n))
+      () => n -> fmt.tryCommit(n, df, fmt.currentVersion(n))
     def append(n: String, delta: DataFrame) =
-      n -> fmt.tryAppend(n, delta, pinned.getOrElse(n, 0L), fmt.currentVersion(n))
-    val versions: Map[String, Long] = (
+      () => n -> fmt.tryAppend(n, delta, pinned.getOrElse(n, 0L), fmt.currentVersion(n))
+    val commits =
       if (res.retentionFired)
         tableNames.zip(Seq(res.db.artist, res.db.song, res.db.artistSongMap, res.db.ranking))
           .map { case (n, df) => full(n, df) }
@@ -141,7 +151,8 @@ object DailyEtl {
         if (res.updatedSongs.isEmpty) append("song", res.insertedSongs)
         else full("song", res.db.song),
         append("artist_song_map", res.insertedMaps),
-        append("ranking", res.insertedRankings))).toMap
+        append("ranking", res.insertedRankings))
+    val versions = Wave.run(spark)(commits).toMap
     storeOf(spark, fmt).commit(versions, manifestBase)
     versions
   }
@@ -168,7 +179,22 @@ object DailyEtl {
     * session, so the result's frames stay in the caller's session and
     * its query listeners see the day's queries. Other queries running
     * on that session while `run` is inside its day run interpreted
-    * too. */
+    * too.
+    *
+    * A day is many small jobs, most of which do not depend on each
+    * other, so three [[graft.operators.Wave]]s run them concurrently
+    * on the driver, each worker on the caller's session (so inside
+    * the interpreted window) and inside the caller's checkpoint
+    * scopes:
+    *  1. in [[Load.loadBatch]], the four upserts and the S10 URL probe;
+    *  2. in [[persist]], the four table commits; the manifest commits
+    *     after all four have returned;
+    *  3. the four CSV sinks and the render; the README file is written
+    *     after the whole wave succeeded.
+    * A wave waits for all of its members and then rethrows the first
+    * failure, so no worker is still writing when `run` throws. A
+    * failure in the commit wave leaves the manifest unpublished: the
+    * next run reads the previous state (DailyEtlSpec injects one). */
   def run(spark: SparkSession, fetcher: Sources.Fetcher, cfg: Config,
       bearerToken: Option[String] = None,
       backend: TableFormat.Backend = TableFormat.DefaultBackend): Load.LoadResult =
@@ -244,20 +270,25 @@ object DailyEtl {
     if (nDocs != cfg.topN)
       throw new SongDataNotFoundError(
         s"Ranking data is missing: track lookup returned $nDocs of ${cfg.topN} songs.")
+    // the waves below touch these objects: initialise them on this
+    // thread first (see graft.operators.Wave)
+    (graft.etl.ManifestParquet, Render, Music, graft.operators.ExactRank): Unit
     val pins = persist(spark, fmt, res, pinned, manifestBase)
 
     // 4. S11 CSV append sinks: the four RETURNING sets, ranking with
     //    the snapshot-derived ranking_id export column
-    cfg.csvDir.foreach { dir =>
-      Load.appendCsv(res.insertedArtists, s"$dir/artist.csv")
-      Load.appendCsv(res.insertedSongs, s"$dir/song.csv")
-      Load.appendCsv(res.insertedMaps, s"$dir/artist_song_map.csv")
-      Load.appendCsv(
-        Music.withRankingIds(res.insertedRankings)
+    val sinks = cfg.csvDir.toSeq.flatMap { dir =>
+      // each frame is built inside its member: withRankingIds runs a job
+      def sink(table: String)(df: => DataFrame) =
+        () => Load.appendCsv(df, s"$dir/$table.csv")
+      Seq(
+        sink("artist")(res.insertedArtists),
+        sink("song")(res.insertedSongs),
+        sink("artist_song_map")(res.insertedMaps),
+        sink("ranking")(Music.withRankingIds(res.insertedRankings)
           .select(col("ranking_id"), col("isrc"),
             date_format(col("ranking_date"), "yyyy-MM-dd").as("ranking_date"),
-            col("rank"), col("ranking_source")),
-        s"$dir/ranking.csv")
+            col("rank"), col("ranking_source"))))
     }
 
     // 5. render from the COMMITTED store, exactly as the reference's
@@ -266,8 +297,10 @@ object DailyEtl {
     //    (ManifestStore invariant 2). The ranking read is range-pruned
     //    to the only two chart dates the render can reference — O(day),
     //    not O(history), against a backfilled archive
-    val md = Render.renderForDate(
+    lazy val md = Render.renderForDate(
       renderDbOf(fmt, pins, dbAt(fmt, pins), cfg.date), cfg.date)
+    // 4 and 5 run as one wave; the README is written only once it succeeded
+    Wave.run(spark)(sinks :+ (() => md))
     Files.write(Paths.get(cfg.renderPath), md.getBytes("UTF-8"))
     res
   }

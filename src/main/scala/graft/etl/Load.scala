@@ -1,11 +1,16 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.io.MusicCsv.keepBestRow
 import graft.model.Music.MusicDb
 import graft.operators.CheckpointBlocks.local
+import graft.operators.Wave
 
 /** The load layer: every `INSERT … ON CONFLICT DO NOTHING RETURNING`
   * of the reference (S9, `etl_pipeline.py:594-612,699-728,768-786,
@@ -145,8 +150,13 @@ object Load {
       retentionFired: Boolean)
 
   /** Full daily load (reference `main()` stages 1-2,
-    * `etl_pipeline.py:1003-1022`): dims first, then bridge + fact —
-    * the FK dependency barrier becomes plain sequential job ordering.
+    * `etl_pipeline.py:1003-1022`): the reference inserts dims first,
+    * then bridge + fact. Each upsert here anti-joins only its own
+    * table and the batch, never another upsert's result, so the four
+    * run concurrently as one [[graft.operators.Wave]] with the S10 URL
+    * probe; the FK order is kept where it matters, in the committed
+    * state, which the manifest publishes for all four tables at once.
+    * The S10 fill, the retention and its cascade follow in order.
     *
     * Each stage executes exactly once, here: `docs` at entry, every
     * upsert's RETURNING set (the new state is `existing ∪ inserted`),
@@ -172,40 +182,48 @@ object Load {
     val batch = local(docs)
     val pos = Seq(col("source").asc, col("position").asc)
 
-    val (insArtist, newArtist) = upsertOnce(db.artist, Normalize.artists(batch),
+    // the four upserts and the S10 probe each read only their own
+    // table and the batch: one wave runs them, then the fill, the
+    // retention and its cascade follow in order
+    lazy val artist = upsertOnce(db.artist, Normalize.artists(batch),
       Seq(Seq("artist_id")), Seq(Normalize.artistPriority))
-
     // keep (source, position) through the within-batch dedup; upsert
     // projects to the table schema only after ordering by them
     val songs = batch.select(
       (db.song.columns.map(col) ++ Seq(col("source"), col("position"))).toSeq: _*)
-    val (insSong, newSong0) = upsertOnce(
+    lazy val song = upsertOnce(
       db.song, songs,
       Seq(Seq("isrc"), Seq("spotify_url"), Seq("apple_music_url")),
       pos)
-    // songs already present keep their row but may gain an
-    // apple_music_url they lacked (S10 enrich path); a batch that
-    // carries no url fills nothing
-    val urls = batch.select(col("isrc"), col("apple_music_url"))
-      .where(col("apple_music_url").isNotNull)
-    val (updSong, newSong) =
-      if (urls.isEmpty) (newSong0.limit(0), newSong0)
-      else returningAndState(
-        local(filled(newSong0, urls, "isrc", "apple_music_url")
-          .select((db.song.columns :+ "__hit").map(col).toSeq: _*)),
-        db.song.columns)
-
-    val (insMap, newMap) = upsertOnce(db.artistSongMap, Normalize.artistSongMaps(batch),
+    lazy val map = upsertOnce(db.artistSongMap, Normalize.artistSongMaps(batch),
       Seq(Seq("artist_id", "isrc")), Seq(col("artist_id").asc))
-
     // rank is 1:1 with position within each source, so (source, rank)
     // reproduces the reference's insert order without re-carrying the
     // ingestion columns through the W2 window
-    val (insRank, newRank) = upsertOnce(
+    lazy val rank = upsertOnce(
       db.ranking, Normalize.rankings(batch, today),
       Seq(Seq("isrc", "ranking_date", "ranking_source"),
         Seq("ranking_date", "rank", "ranking_source")),
       Seq(col("ranking_source").asc, col("rank").asc))
+    val urls = batch.select(col("isrc"), col("apple_music_url"))
+      .where(col("apple_music_url").isNotNull)
+    lazy val noUrls = urls.isEmpty
+    // the wave's members touch these objects; initialise them here
+    (Normalize, graft.io.MusicCsv): Unit
+    Wave.run(batch.sparkSession)(Seq(() => artist, () => song, () => map, () => rank,
+      () => noUrls))
+    val ((insArtist, newArtist), (insSong, newSong0), (insMap, newMap), (insRank, newRank)) =
+      (artist, song, map, rank)
+
+    // songs already present keep their row but may gain an
+    // apple_music_url they lacked (S10 enrich path); a batch that
+    // carries no url fills nothing
+    val (updSong, newSong) =
+      if (noUrls) (newSong0.limit(0), newSong0)
+      else returningAndState(
+        local(filled(newSong0, urls, "isrc", "apple_music_url")
+          .select((db.song.columns :+ "__hit").map(col).toSeq: _*)),
+        db.song.columns)
 
     // AFTER INSERT retention trigger X5 fires on the fact table
     val loaded = MusicDb(newArtist, newSong, newMap, newRank)
@@ -223,15 +241,52 @@ object Load {
     (inserted, existing.unionByName(inserted))
   }
 
-  /** S11 CSV append sink: quoted values, NULL = empty unquoted field,
-    * ISO dates — matching the reference's CSV conventions
-    * (`etl_pipeline.py:732-742`). Spark appends part-files, not lines;
-    * same semantics, scalable layout. */
-  def appendCsv(df: DataFrame, path: String): Unit =
-    df.write
-      .mode("append")
-      .option("quoteAll", "true")
-      .option("emptyValue", "")
-      .option("nullValue", "")
-      .csv(path)
+  /** S11 CSV append sink, in the reference's CSV conventions
+    * (`etl_pipeline.py:732-742`, SURVEY.md §3.3): every non-null value
+    * double-quoted, SQL NULL an unquoted empty field (so a
+    * `\copy … FORMAT csv` rebuild reads NULL, not an empty string,
+    * into a UNIQUE column), ISO dates. The other bytes are the ones
+    * Spark's `quoteAll` CSV writer produces: lower-case booleans,
+    * values trimmed, and `\` and `"` inside a value escaped with `\`.
+    *
+    * Written from the driver: `df` is a RETURNING set, a subset of the
+    * day's top-N batch, so it is collected and written as one new
+    * `part-*.csv` file in the `path` directory — first to a hidden temp
+    * file, then renamed, so a reader listing the directory never sees
+    * a partial file. One Spark job (the collect), no write job and no
+    * `_temporary` commit protocol. An empty set writes no file. */
+  def appendCsv(df: DataFrame, path: String): Unit = {
+    val unsupported = df.schema.fields.filterNot(f => csvType(f.dataType))
+    require(unsupported.isEmpty,
+      s"appendCsv: no CSV form for ${unsupported.map(_.toString).mkString(", ")}")
+    val rows = df.collect()
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
+    if (rows.nonEmpty) {
+      val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.csv"
+      val tmp = new Path(dir, s".$name.tmp")
+      val out = fs.create(tmp, false)
+      try out.write(rows.map(csvLine).mkString.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, new Path(dir, name)))
+        throw new java.io.IOException(s"appendCsv: could not rename $tmp into $path")
+    }
+  }
+
+  private def csvType(dt: DataType): Boolean = dt match {
+    case StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
+         FloatType | DoubleType | DateType => true
+    case _ => false
+  }
+
+  /** One CSV line of a row: NULL unquoted and empty; every other value
+    * as Spark's writer prints it (a date ISO `yyyy-MM-dd`), trimmed of
+    * leading and trailing whitespace as Spark's writer trims, with `\`
+    * escaped `\\` and `"` escaped `\"`, and quoted. */
+  private def csvLine(r: Row): String =
+    (0 until r.length).map { i =>
+      if (r.isNullAt(i)) ""
+      else "\"" + r.get(i).toString.trim.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    }.mkString("", ",", "\n")
 }

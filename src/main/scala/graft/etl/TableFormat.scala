@@ -444,40 +444,66 @@ final class ManifestParquet(spark: SparkSession, root: String)
   /** Stage `df` and record its COMMIT STATISTICS (row count + per-
     * column min/max for stat-eligible types) in the manifest entry —
     * what powers [[readVersionRange]]'s file pruning and
-    * [[statsUpperBound]]'s job-free reads. The stats come from one
-    * column-pruned pass over the files just written — O(batch), never
-    * O(history), and byte-exact; a production backend would lift the
-    * identical numbers from the parquet footers the write already
-    * produced (zero re-read, at the price of footer-stat truncation
-    * caveats). Float/double columns drop their stats when any NaN is
-    * present — NaN breaks interval reasoning, so those dirs simply
-    * never prune. */
-  private def stageWithMeta(table: String, df: DataFrame,
+    * [[statsUpperBound]]'s job-free reads. The stats are observed on
+    * the staging write itself (an `Observation` of [[statsExprs]]), so
+    * a commit runs one query, not a write plus a re-read of what it
+    * wrote; the numbers equal [[metaFor]] over the staged files
+    * (TableFormatSpec checks it). The metrics arrive on the listener
+    * bus after the write: the wait for them is bounded, and a commit
+    * whose metrics never arrive fails loudly before any manifest is
+    * published, leaving its staged dir an orphan. Float/double
+    * columns drop their stats when any NaN is present — NaN breaks
+    * interval reasoning, so those dirs simply never prune. */
+  private[graft] def stageWithMeta(table: String, df: DataFrame,
       dataChange: Boolean): String = {
-    val name = stage(table, df)
-    val staged = spark.read.schema(df.schema)
-      .parquet(dirPath(table, name))
-    renderEntry(name, metaFor(staged, df.schema, dataChange))
+    val exprs = statsExprs(df.schema)
+    val observed = org.apache.spark.sql.Observation()
+    val name = stage(table, df.observe(observed, exprs.head, exprs.tail: _*))
+    val row =
+      try scala.concurrent.Await.result(observed.future, ManifestParquet.StatsWait)
+      catch {
+        case e: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"commit of $table: the staging write's statistics did not arrive within " +
+              s"${ManifestParquet.StatsWait}; no manifest was published (staged dir $name " +
+              "is an orphan)", e)
+      }
+    renderEntry(name, metaOf(row, df.schema, dataChange))
   }
 
-  /** The one bounded stats pass over a staged dir's files. */
-  private def metaFor(staged: DataFrame, schema: StructType,
-      dataChange: Boolean): EntryMeta = {
-    import org.apache.spark.sql.functions.{count, isnan, lit, max, min}
-    val fields = schema.fields.filter(f => statsEligible(f.dataType)).toSeq
-    val isFloaty = fields.map(f => f.dataType match {
-      case org.apache.spark.sql.types.FloatType |
-           org.apache.spark.sql.types.DoubleType => true
-      case _ => false
-    })
-    val exprs = count(lit(1)) +: fields.zip(isFloaty).flatMap { case (f, fl) =>
-      val c = org.apache.spark.sql.functions.col(f.name)
-      Seq(min(c), max(c)) ++ (if (fl) Seq(max(isnan(c))) else Nil)
+  /** The stats aggregates over `schema`: the row count, then per
+    * stat-eligible column its min and max, plus a NaN flag for
+    * float/double columns. [[metaOf]] reads a row of them back. */
+  private def statsExprs(schema: StructType): Seq[Column] = {
+    import org.apache.spark.sql.functions.{col, count, isnan, lit, max, min}
+    count(lit(1)) +: schema.fields.toSeq.filter(f => statsEligible(f.dataType)).flatMap { f =>
+      val c = col(f.name)
+      Seq(min(c), max(c)) ++ (if (isFloaty(f.dataType)) Seq(max(isnan(c))) else Nil)
     }
-    val row = staged.agg(exprs.head, exprs.tail: _*).head()
+  }
+
+  private def isFloaty(dt: DataType): Boolean = dt match {
+    case org.apache.spark.sql.types.FloatType |
+         org.apache.spark.sql.types.DoubleType => true
+    case _ => false
+  }
+
+  /** One bounded stats pass over a staged dir's files: [[statsExprs]]
+    * as a query of their own (clustered rewrites, which stage several
+    * dirs in one write). */
+  private[graft] def metaFor(staged: DataFrame, schema: StructType,
+      dataChange: Boolean): EntryMeta = {
+    val exprs = statsExprs(schema)
+    metaOf(staged.agg(exprs.head, exprs.tail: _*).head(), schema, dataChange)
+  }
+
+  /** The entry metadata of one row of [[statsExprs]] over `schema`. */
+  private def metaOf(row: org.apache.spark.sql.Row, schema: StructType,
+      dataChange: Boolean): EntryMeta = {
     val rows = row.getLong(0)
     var i = 1
-    val stats = fields.zip(isFloaty).flatMap { case (f, fl) =>
+    val stats = schema.fields.toSeq.filter(f => statsEligible(f.dataType)).flatMap { f =>
+      val fl = isFloaty(f.dataType)
       val (mnAt, mxAt) = (i, i + 1)
       val nanAt = if (fl) Some(i + 2) else None
       i += (if (fl) 3 else 2)
@@ -891,6 +917,10 @@ object ManifestParquet {
   import org.apache.spark.unsafe.types.UTF8String
   import org.json4s._
   import org.json4s.jackson.JsonMethods
+
+  /** How long a commit waits for its staging write's observed
+    * statistics, which the listener bus delivers after the write. */
+  private[etl] val StatsWait = scala.concurrent.duration.Duration(2, "min")
 
   /** One manifest line, parsed. Tombstones are `!<keyCol>:<dir>`;
     * anything else is a data dir — optionally followed by one space

@@ -23,7 +23,9 @@ import org.apache.spark.storage.StorageLevel
   *    current thread; closing that block frees it. The code that runs
   *    plans owns the scope (a Bench rep, a Verify query, a spec test),
   *    so every plan built inside a scope stays readable until the
-  *    scope ends, however many plans are built before any runs.
+  *    scope ends, however many plans are built before any runs. A
+  *    [[Wave]] worker runs inside its caller's open scopes, so what it
+  *    registers is freed with the caller's scope.
   *
   * With no scope open, [[local]] does not track the checkpoint and
   * Spark's ContextCleaner reclaims it once nothing references it.
@@ -70,15 +72,28 @@ private[graft] object CheckpointBlocks {
     try body
     finally {
       open.set(outer)
-      mine.foreach(cp => scopeFreed.addAndGet(free(cp)))
+      mine.synchronized(mine.toList).foreach(cp => scopeFreed.addAndGet(free(cp)))
     }
   }
 
   /** An eager local checkpoint of `df`, freed when the innermost open
-    * scope closes (untracked when none is open). */
+    * scope closes (untracked when none is open). Registration is
+    * thread-safe: [[Wave]] workers share their caller's scopes. */
   def local(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
-    open.get.headOption.foreach(_ += cp)
+    open.get.headOption.foreach(s => s.synchronized(s += cp))
     cp
+  }
+
+  /** This thread's open scopes, for [[withScopes]] on another thread. */
+  private[operators] def openScopes: List[ArrayBuffer[DataFrame]] = open.get
+
+  /** Runs `body` on this thread inside `scopes` (another thread's
+    * [[openScopes]]), then puts this thread's own scopes back. */
+  private[operators] def withScopes[T](scopes: List[ArrayBuffer[DataFrame]])(body: => T): T = {
+    val own = open.get
+    open.set(scopes)
+    try body
+    finally open.set(own)
   }
 }

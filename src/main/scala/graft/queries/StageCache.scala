@@ -260,15 +260,15 @@ private[graft] object Stages {
       LmStage.buildCount + VectorStage.buildCount
 
   /** Resolve every persistable artifact, fanning independent builds
-    * out over a bounded thread pool — they are independent Spark jobs,
-    * so on an idle 32-core box the wall cost is max-of-builds, not
-    * sum-of-builds. Same-artifact requests dedupe inside [[StageCache]]
-    * (memo cells), and a builder resolving a dependency just blocks on
-    * that cell. Returns wall seconds; a failed build rethrows (loud,
-    * never a silently-missing artifact). */
+    * out over one [[graft.operators.Wave]] (at most
+    * [[graft.operators.Wave.MaxThreads]] threads) — they are
+    * independent Spark jobs, so on an idle 32-core box the wall cost
+    * is max-of-builds, not sum-of-builds. Same-artifact requests
+    * dedupe inside [[StageCache]] (memo cells), and a builder
+    * resolving a dependency just blocks on that cell. Returns wall
+    * seconds; a failed build rethrows once every build has finished
+    * (loud, never a silently-missing artifact). */
   def resolveAllConcurrently(spark: SparkSession, dir: String): Double = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     val t0 = System.nanoTime()
     // JVM class-init deadlock guard (round-9 postmortem): the query
     // objects' oracle-SQL vals cross-reference (CorpusQueries ↔
@@ -279,15 +279,9 @@ private[graft] object Stages {
     // CorpusQueries — both parked on the other's class monitor
     // forever). Force the whole chain on THIS thread first.
     graft.SparkEntry.queries.size: Unit
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, persistableArtifacts.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val fs = persistableArtifacts.map { case (_, build) =>
-        Future { build(spark, dir).count(): Unit }
-      }
-      fs.foreach(Await.result(_, Duration.Inf))
-    } finally pool.shutdown()
+    graft.operators.Wave.run(spark)(persistableArtifacts.map { case (_, build) =>
+      () => build(spark, dir).count(): Unit
+    })
     (System.nanoTime() - t0) / 1e9
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.CheckpointBlocks
+import graft.operators.{CheckpointBlocks, Wave}
 import graft.vector.VectorOps
 
 /** Checkpoint lifetimes: a plan built inside a scope stays readable
@@ -87,5 +87,43 @@ class CheckpointScopeSpec extends SparkSpec {
     }
     assert(e.getMessage == "query failed")
     assert(registered.nonEmpty && freed(registered))
+  }
+
+  test("a checkpoint taken inside a wave is freed when the caller's scope closes") {
+    val (registered, counts) = CheckpointBlocks.scoped {
+      val cps = Wave.run(spark)(Seq(
+        () => CheckpointBlocks.local(spark.range(100).toDF("v")),
+        () => CheckpointBlocks.local(spark.range(10).toDF("w"))))
+      val rdds = cps.flatMap(persistedIn)
+      // the workers' scopes were the caller's: nothing freed yet
+      assert(rdds.size >= 2 && !freed(rdds))
+      (rdds, cps.map(_.count()))
+    }
+    assert(counts == Seq(100L, 10L))
+    assert(freed(registered))
+  }
+
+  test("a wave member that throws: the wave waits for the others, then rethrows the first failure") {
+    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    def member(ms: Long)(body: => Long): () => Long = () => {
+      threads.add(Thread.currentThread())
+      Thread.sleep(ms)
+      val v = body
+      finished.incrementAndGet()
+      v
+    }
+    val e = intercept[IllegalStateException] {
+      Wave.run(spark)(Seq(
+        member(400)(spark.range(1000).count()),
+        () => throw new IllegalStateException("first member failed"),
+        member(0)(throw new IllegalArgumentException("second member failed")),
+        member(800)(spark.range(10).count())))
+    }
+    assert(e.getMessage == "first member failed")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second member failed"))
+    // both slow members finished before run threw, and their threads exited
+    assert(finished.get == 2)
+    assert(threads.size == 3 && threads.toArray(Array.empty[Thread]).forall(!_.isAlive))
   }
 }

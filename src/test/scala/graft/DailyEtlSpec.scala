@@ -110,10 +110,9 @@ class DailyEtlSpec extends SparkSpec {
         plans.add(qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
-    val shared = Seq(wholeStage, factoryMode).map(k => k -> spark.conf.getAll.get(k))
-    spark.conf.set(wholeStage, "true") // the caller set this one
-    spark.conf.unset(factoryMode) // and never set this one
-    try {
+    restoringConfs(wholeStage, factoryMode) { // other suites share this session
+      spark.conf.set(wholeStage, "true") // the caller set this one
+      spark.conf.unset(factoryMode) // and never set this one
       org.apache.spark.ListenerDrain(spark.sparkContext)
       spark.listenerManager.register(listener)
       try {
@@ -130,9 +129,6 @@ class DailyEtlSpec extends SparkSpec {
       intercept[DailyEtl.SongDataNotFoundError](
         DailyEtl.run(spark, fetcher, cfg(2, ids.take(9))))
       assert(confs == (Some("true"), None), "an aborted day must restore the caller's confs")
-    } finally shared.foreach { // other suites share this session
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -344,6 +340,75 @@ class DailyEtlSpec extends SparkSpec {
       DailyEtl.run(spark, fetcher, cfg(3, LocalDate.of(2026, 2, 2), ids1.drop(1) :+ "t99")))
     assert(r3.insertedSongs.count() == 1 && !r3.retentionFired)
     assert(fmt.read("ranking").count() == 20)
+  }
+
+  /** A backend decorator whose commits to `table` throw; everything
+    * else is forwarded to `inner`. */
+  private final class FailingCommits(inner: graft.etl.TableFormat, table: String)
+      extends graft.etl.TableFormat {
+    import org.apache.spark.sql.DataFrame
+    private def failOn(t: String): Unit =
+      if (t == table) throw new java.io.IOException(s"injected commit failure on $t")
+    def read(t: String): DataFrame = inner.read(t)
+    def readVersion(t: String, v: Long): DataFrame = inner.readVersion(t, v)
+    def readVersionRange(t: String, v: Long, column: String,
+        lower: Option[Any], upper: Option[Any]): DataFrame =
+      inner.readVersionRange(t, v, column, lower, upper)
+    def statsUpperBound(t: String, v: Long, column: String): Option[Any] =
+      inner.statsUpperBound(t, v, column)
+    def currentVersion(t: String): Long = inner.currentVersion(t)
+    def tryCommit(t: String, df: DataFrame, expectedBase: Long): Long = {
+      failOn(t); inner.tryCommit(t, df, expectedBase)
+    }
+    def tryAppend(t: String, delta: DataFrame, ontoVersion: Long, expectedBase: Long): Long = {
+      failOn(t); inner.tryAppend(t, delta, ontoVersion, expectedBase)
+    }
+    def tryDeleteRows(t: String, keys: DataFrame, ontoVersion: Long, expectedBase: Long): Long = {
+      failOn(t); inner.tryDeleteRows(t, keys, ontoVersion, expectedBase)
+    }
+  }
+
+  test("a commit that fails inside the commit wave publishes no manifest; the next run reads the previous state") {
+    val dir = Files.createTempDirectory("dailyetl_wavefail")
+    val store = s"$dir/store"
+    val csv = s"$dir/csv"
+    val fetcher = new Sources.FileFetcher(Map.empty)
+    val ids1 = (1 to 10).map(i => s"t$i")
+    def cfg(n: Int, day: Int, idsN: Seq[String]) = DailyEtl.Config(
+      store, LocalDate.of(2026, 2, day),
+      write(java.nio.file.Paths.get(s"$dir/p$n.html"), playlistHtml(idsN)),
+      write(java.nio.file.Paths.get(s"$dir/t$n.json"), tracksJson(idsN)),
+      s"$dir/README.md", Some(csv))
+    DailyEtl.run(spark, fetcher, cfg(1, 1, ids1))
+    val day1Readme = Files.readAllBytes(java.nio.file.Paths.get(s"$dir/README.md"))
+    val fmt = graft.etl.TableFormat.DefaultBackend(spark, store)
+    val manifest = new graft.etl.ManifestStore(spark, fmt,
+      Seq("artist", "song", "artist_song_map", "ranking"))
+    val base1 = manifest.base
+    val others = Seq("artist", "artist_song_map", "ranking")
+    val versions1 = others.map(fmt.currentVersion)
+
+    // the song commit fails at once, while the other three are in flight
+    val failing: graft.etl.TableFormat.Backend =
+      (s, root) => new FailingCommits(graft.etl.TableFormat.DefaultBackend(s, root), "song")
+    val cfg2 = cfg(2, 2, ids1.drop(1) :+ "t99")
+    val e = intercept[java.io.IOException](DailyEtl.run(spark, fetcher, cfg2, backend = failing))
+    assert(e.getMessage == "injected commit failure on song")
+    // no manifest was published, and the wave's other commits had all
+    // finished when run threw: each left one orphan version
+    assert(manifest.base == base1)
+    assert(others.map(fmt.currentVersion) == versions1.map(_ + 1))
+    // nothing after the commit wave ran: no CSV rows, no README
+    assert(spark.read.text(s"$csv/ranking.csv").count() == 10)
+    assert(java.util.Arrays.equals(
+      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/README.md")), day1Readme))
+
+    // the next run reads the day-1 state, not the orphans
+    val r2 = DailyEtl.run(spark, fetcher, cfg2)
+    assert(manifest.base == base1 + 1)
+    assert(r2.insertedSongs.count() == 1 && r2.insertedArtists.count() == 1)
+    assert(r2.db.ranking.count() == 20)
+    assert(spark.read.text(s"$csv/ranking.csv").count() == 20)
   }
 
   test("token extraction parses the OAuth2 response shape") {

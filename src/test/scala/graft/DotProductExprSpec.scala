@@ -35,18 +35,15 @@ class DotProductExprSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen") {
-    // force the no-codegen path
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    restoringConfs("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode") {
+      // force the no-codegen path
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       val interp = df.select(DotProductExpr.dot(col("fvec"), col("dvec"))).as[Double].collect()
       spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       val gen = df.select(DotProductExpr.dot(col("fvec"), col("dvec"))).as[Double].collect()
       assert(interp.toSeq === gen.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
   }
 

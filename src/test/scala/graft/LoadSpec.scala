@@ -227,6 +227,48 @@ class LoadSpec extends SparkSpec {
     assert(out.song.select("isrc").as[String].collect().toSeq == Seq("I9"))
   }
 
+  /** The `part-*` files of a CSV sink directory, concatenated in name order. */
+  private def sinkText(dir: String): String =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString
+
+  test("S11 CSV sink: NULL is an unquoted empty field and reads back as NULL through MusicCsv") {
+    val dir = java.nio.file.Files.createTempDirectory("csv_sink").toString
+    val songs = Seq(
+      ("I1", "Say \"Hi\"", 1000, true, "https://s/1", Option("https://a/1")),
+      ("I2", "Two, Three", 2000, false, "https://s/2", Option.empty[String]))
+      .toDF("isrc", "song_name", "song_duration_ms", "is_explicit", "spotify_url", "apple_music_url")
+    Load.appendCsv(songs, s"$dir/song.csv")
+    val text = sinkText(s"$dir/song.csv")
+    assert(text ==
+      "\"I1\",\"Say \\\"Hi\\\"\",\"1000\",\"true\",\"https://s/1\",\"https://a/1\"\n" +
+      "\"I2\",\"Two, Three\",\"2000\",\"false\",\"https://s/2\",\n")
+    // under the seed fixture's header, the sink's lines load as a seed song.csv
+    val seed = java.nio.file.Paths.get(getClass.getResource("/seed").toURI).toString
+    val header = "\"isrc\",\"song_name\",\"song_duration_ms\",\"is_explicit\",\"spotify_url\"," +
+      "\"apple_music_url\"\n"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/seed_song.csv"), header + text)
+    val db = graft.io.MusicCsv.loadSeed(spark, s"$seed/artist.csv", s"$dir/seed_song.csv",
+      s"$seed/artist_song_map.csv", Seq(s"$seed/ranking.csv"))
+    assert(rowsOf(db.song.orderBy("isrc")) == Seq(
+      Seq("I1", "Say \"Hi\"", 1000, true, "https://s/1", "https://a/1"),
+      Seq("I2", "Two, Three", 2000, false, "https://s/2", null)))
+  }
+
+  test("S11 CSV sink: non-null values are byte-equal to Spark's quoteAll CSV writer") {
+    val dir = java.nio.file.Files.createTempDirectory("csv_sink_bytes").toString
+    val rows = Seq(
+      ("a\"b", "back\\slash", "", 7L, 1.5, true, d("2026-01-02")),
+      ("comma, here", "\\\"", " pad ", -1L, -0.25, false, d("1999-12-31")),
+      ("line\nbreak", "\ttab\t", "x", 0L, 1.0e10, true, d("2000-02-29")))
+      .toDF("s1", "s2", "s3", "n", "x", "b", "day").coalesce(1)
+    Load.appendCsv(rows, s"$dir/driver.csv")
+    rows.write.option("quoteAll", "true").option("emptyValue", "").option("nullValue", "")
+      .csv(s"$dir/spark.csv")
+    assert(sinkText(s"$dir/driver.csv") == sinkText(s"$dir/spark.csv"))
+  }
+
   test("constraint audit: clean reference seed reports no violations") {
     val db = graft.io.MusicCsv.loadSeedDir(spark, "/root/reference/db/csv")
     val v = Maintenance.constraintViolations(db, d("2026-07-24"))

@@ -51,6 +51,18 @@ abstract class SparkSpec extends AnyFunSuite {
     self + kids.map(countShuffles).sum
   }
 
+  /** Runs `f`, then puts each of `keys` back as it was on the shared
+    * session: its previous value, or unset if it was unset. Later
+    * suites in the JVM then see the session as this one found it. */
+  def restoringConfs[T](keys: String*)(f: => T): T = {
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    try f
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Run `f` with auto-broadcast disabled, so only an explicit
     * broadcast() hint can put a BroadcastExchange in a plan. */
   def withoutAutoBroadcast[T](f: => T): T = {

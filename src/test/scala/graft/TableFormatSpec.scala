@@ -442,6 +442,40 @@ class TableFormatSpec extends SparkSpec {
       "a NaN-poisoned column has no trustworthy bound")
   }
 
+  test("[manifest-parquet] observed commit statistics equal a re-read of the staged files") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val root = java.nio.file.Files.createTempDirectory("tfmt_observed").toString
+    val fmt = new ManifestParquet(spark, root)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType),
+      StructField("score", DoubleType), StructField("day", DateType)))
+    val rows = Seq(Row(1L, "a", 1.5, java.sql.Date.valueOf("2026-01-02")),
+      Row(2L, null, -3.0, java.sql.Date.valueOf("2025-12-31")))
+    def frame(rs: Seq[Row]) = spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+    val full = frame(rows)
+    val frames = Seq(
+      "rows" -> full,
+      "checkpoint of an empty frame" ->
+        graft.operators.CheckpointBlocks.local(full.where(col("id") < 0)),
+      "limit(0)" -> full.limit(0),
+      "empty LocalRelation" -> frame(Nil),
+      "filter keeping no rows" -> full.where(col("id") > 100),
+      "empty RDD" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      "NaN-bearing doubles" -> frame(rows :+ Row(3L, "c", Double.NaN, null)),
+      "all-null columns" -> frame(Seq(Row(1L, null, null, null), Row(2L, null, null, null))))
+    frames.foreach { case (what, df) =>
+      val entry = ManifestParquet.parseEntry(fmt.stageWithMeta("t", df, dataChange = true))
+      val observed = entry match {
+        case ManifestParquet.DataEntry(_, Some(m)) => m
+        case other => fail(s"$what: staged entry carries no statistics: $other")
+      }
+      val reread = fmt.metaFor(
+        spark.read.schema(schema).parquet(s"$root/t/${entry.dir}"), schema,
+        dataChange = true)
+      assert(observed == reread, s"$what: observed $observed, re-read $reread")
+    }
+  }
+
   test("[manifest-parquet] statsUpperBound: job-free exact max on appends, a safe over-estimate after deletes") {
     val root = java.nio.file.Files.createTempDirectory("tfmt_ub").toString
     val fmt = new ManifestParquet(spark, root)

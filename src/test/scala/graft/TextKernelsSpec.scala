@@ -104,18 +104,15 @@ class TextKernelsSpec extends SparkSpec {
       .select(col("doc_id"), col("shingles"),
         TextExprs.lshBands(col("shingles"), k, bands).as("b"))
     val sim = TextOps.withSimhash(docs, n).select("doc_id", "simhash")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
+    restoringConfs("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode") {
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       val shI = sh.collect().toSeq.map(_.toString)
       val simI = sim.collect().toSeq.map(_.toString)
       spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
       spark.conf.set("spark.sql.codegen.wholeStage", "true")
       assert(sh.collect().toSeq.map(_.toString) == shI)
       assert(sim.collect().toSeq.map(_.toString) == simI)
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
   }
 
