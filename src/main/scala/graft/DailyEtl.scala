@@ -44,13 +44,14 @@ import graft.report.Render
   * ≤`batchSize`-id batch with the batch ordinal carried as the
   * explicit order key (SURVEY §7.4 risk 3 — never row order).
   *
-  * All parsing and loading is Spark-side: the same `run` composition
-  * scales from the reference's 10 songs/day to a backfill of every
-  * chart page ever archived — only the driver-side fetch loop is
-  * per-day work. The day itself runs interpreted (see [[run]]),
-  * which is sized for the daily bound, not for a backfill: a
-  * multi-year replay that keeps far more than a year of rankings
-  * belongs on compiled code.
+  * Parsing and the table scans are Spark-side, but the load is sized
+  * for the daily bound, not for a backfill: [[Load.loadBatch]] holds
+  * the day's batch and the four tables on the driver, and the day
+  * runs interpreted (see [[run]]). Both rest on X5 retention, which
+  * keeps the store at about a year of charts whatever the number of
+  * days loaded. A replay that keeps far more than a year of rankings
+  * is outside that bound: it belongs on Spark-side anti-joins
+  * ([[Load.upsert]]) and compiled code.
   */
 object DailyEtl {
 
@@ -138,10 +139,13 @@ object DailyEtl {
     * @return the (table → version) map the new manifest pins */
   private def persist(spark: SparkSession, fmt: TableFormat, res: Load.LoadResult,
       pinned: Map[String, Long], manifestBase: Long): Map[String, Long] = {
+    // each frame is a held LocalRelation, which splits into up to
+    // defaultParallelism partitions: commit each as one file
     def full(n: String, df: DataFrame) =
-      () => n -> fmt.tryCommit(n, df, fmt.currentVersion(n))
+      () => n -> fmt.tryCommit(n, df.coalesce(1), fmt.currentVersion(n))
     def append(n: String, delta: DataFrame) =
-      () => n -> fmt.tryAppend(n, delta, pinned.getOrElse(n, 0L), fmt.currentVersion(n))
+      () => n -> fmt.tryAppend(n, delta.coalesce(1), pinned.getOrElse(n, 0L),
+        fmt.currentVersion(n))
     val commits =
       if (res.retentionFired)
         tableNames.zip(Seq(res.db.artist, res.db.song, res.db.artistSongMap, res.db.ranking))
@@ -160,21 +164,26 @@ object DailyEtl {
   /** One daily run, fetcher-injected (specs pass [[Sources
     * .FileFetcher]]; [[main]] wires HTTP/file dispatch). Returns the
     * [[Load.LoadResult]] so callers can inspect the RETURNING sets.
-    * Its frames read the load's checkpoints, which belong to the
-    * caller's innermost open [[graft.operators.CheckpointBlocks.scoped]]
-    * block (Spark's ContextCleaner reclaims them when none is open):
-    * `run` opens no scope of its own, so the result stays readable.
+    * Its frames are held on the driver ([[graft.etl.Held]]), so they
+    * stay readable for as long as the caller keeps the result.
     *
-    * The day runs on Spark's interpreted evaluators: for its length,
-    * whole-stage codegen is off and the expression factory mode is
-    * `NO_CODEGEN` on the caller's session; both confs are restored
-    * when `run` returns or throws. The day is bounded twice over: the
-    * batch is the top `topN` of one playlist page, and X5 retention
-    * keeps the store at about topN × sources × 366 ranking rows. At
-    * that size compiling each operator costs more than it saves: on
-    * 4 cores, a cold day over 13 months of history compiled 290
-    * generated classes, about 4 s of a 15 s day; interpreted it
-    * compiles 10 (under 0.2 s) and takes about 10 s.
+    * The day is bounded twice over: the batch is the top `topN` of one
+    * playlist page, and X5 retention keeps the store at about
+    * topN × sources × 366 ranking rows (a few thousand rows per table).
+    * Two choices rest on that bound, with no cap and no second path
+    * above it, because no store this job writes outgrows it:
+    *  - [[Load.loadBatch]] collects the four pinned tables, the batch
+    *    and every stage it derives to the driver and rebuilds each as a
+    *    `LocalRelation`, so nothing it returns is a checkpoint and
+    *    Catalyst folds filters over it at plan time;
+    *  - the day runs on Spark's interpreted evaluators: for its length,
+    *    whole-stage codegen is off and the expression factory mode is
+    *    `NO_CODEGEN` on the caller's session; both confs are restored
+    *    when `run` returns or throws. At this size compiling each
+    *    operator costs more than it saves: on 4 cores, a cold day over
+    *    13 months of history compiled 290 generated classes, about 4 s
+    *    of a 15 s day; interpreted it compiles 10 (under 0.2 s) and
+    *    takes about 10 s.
     * The confs are set on the caller's session rather than a child
     * session, so the result's frames stay in the caller's session and
     * its query listeners see the day's queries. Other queries running
@@ -182,11 +191,11 @@ object DailyEtl {
     * too.
     *
     * A day is many small jobs, most of which do not depend on each
-    * other, so three [[graft.operators.Wave]]s run them concurrently
-    * on the driver, each worker on the caller's session (so inside
-    * the interpreted window) and inside the caller's checkpoint
-    * scopes:
-    *  1. in [[Load.loadBatch]], the four upserts and the S10 URL probe;
+    * other, so [[graft.operators.Wave]]s run them concurrently on the
+    * driver, each worker on the caller's session (so inside the
+    * interpreted window):
+    *  1. in [[Load.loadBatch]], the four table reads with the docs,
+    *     then the four upserts;
     *  2. in [[persist]], the four table commits; the manifest commits
     *     after all four have returned;
     *  3. the four CSV sinks and the render; the README file is written
@@ -249,24 +258,23 @@ object DailyEtl {
           s"tracks source '$url' did not return JSON")
       }
     }.toSeq
-    // the day's topN docs fit one partition: the load's dedup windows
-    // and aggregates over them then need no exchange
     val docs = Sources.songDocsFromTracksJson(
-      responses.toDF("batch_id", "body"), batchSize = cfg.batchSize).coalesce(1)
+      responses.toDF("batch_id", "body"), batchSize = cfg.batchSize)
 
     // 3. FK-ordered load over the committed state; the parquet commit
     //    IS the between-days checkpoint (no in-memory lineage survives
     //    a day boundary — PipelineE2ESpec's chained-plan lesson).
     //    loadBatch executes each stage once and commits nothing, so
-    //    everything below reads its checkpoints
+    //    everything below reads the rows it holds on the driver
     val fmt = backend(spark, cfg.storeRoot)
     val (db, manifestBase, pinned) = loadDb(spark, fmt)
     val res = Load.loadBatch(db, docs, java.sql.Date.valueOf(cfg.date))
     // the abort contract covers BOTH fetch stages: a tracks response
     // that silently dropped an id (under-full is legal per batch —
     // only OVER-full raises in the parser) must abort the run before
-    // anything commits, not load a short day
-    val nDocs = res.docs.count()
+    // anything commits, not load a short day. The docs are held: this
+    // reads their rows and runs no job
+    val nDocs = res.docs.collect().length
     if (nDocs != cfg.topN)
       throw new SongDataNotFoundError(
         s"Ranking data is missing: track lookup returned $nDocs of ${cfg.topN} songs.")
@@ -389,9 +397,11 @@ object DailyEtl {
       http.postForm(tokenUrl, Sources.clientCredentialsHeader(id, secret),
         Map("grant_type" -> "client_credentials")).body)
     val res = run(spark, fetcher, cfg, token)
+    // the RETURNING sets are held: their sizes read held rows, no job
+    def n(df: DataFrame) = df.collect().length
     println(s"[daily-etl] ${cfg.date}: " +
-      s"artists+${res.insertedArtists.count()} songs+${res.insertedSongs.count()} " +
-      s"maps+${res.insertedMaps.count()} rankings+${res.insertedRankings.count()} " +
+      s"artists+${n(res.insertedArtists)} songs+${n(res.insertedSongs)} " +
+      s"maps+${n(res.insertedMaps)} rankings+${n(res.insertedRankings)} " +
       s"-> ${cfg.renderPath}")
     spark.stop()
   }

@@ -9,7 +9,6 @@ import org.apache.spark.sql.types._
 
 import graft.io.MusicCsv.keepBestRow
 import graft.model.Music.MusicDb
-import graft.operators.CheckpointBlocks.local
 import graft.operators.Wave
 
 /** The load layer: every `INSERT … ON CONFLICT DO NOTHING RETURNING`
@@ -27,21 +26,21 @@ import graft.operators.Wave
   *   3. the surviving set IS the `RETURNING` result — computed before
   *      the append, then unioned in.
   *
-  * Scale: each anti-join shuffles on the constraint key OR broadcasts
-  * the batch side; daily batches are tiny (10 rows in the reference),
-  * so Catalyst broadcasts them and the "upsert" costs one pass over
-  * the existing table per constraint. With a sorted/bucketed store
-  * these collapse further; with a transactional table format this
-  * whole object is `MERGE WHEN NOT MATCHED`.
+  * Scale: [[upsert]] is a plain anti-join chain, one pass over the
+  * existing table per constraint, and scales with the cluster.
+  * [[loadBatch]] does not: it holds the day's batch and the four
+  * tables on the driver, which X5 retention bounds at about a year of
+  * charts (see [[graft.DailyEtl.run]]). With a transactional table
+  * format this whole object is `MERGE WHEN NOT MATCHED`.
   *
   * One execution per stage: the reference computes each RETURNING set
   * once per statement and appends exactly those rows to its CSVs.
   * [[upsert]] and [[updateColumn]] stay lazy (query plans are built
-  * from them), but [[loadBatch]] runs every stage exactly once through
-  * [[graft.operators.CheckpointBlocks.local]], so the commits and CSV
-  * sinks downstream read checkpoints and parquet scans instead of
-  * re-running the parse, the dedup windows and the anti-join chains
-  * once per consumer.
+  * from them), but [[loadBatch]] runs every stage exactly once and
+  * holds its rows on the driver ([[Held]]), so the commits and CSV
+  * sinks downstream read `LocalRelation`s instead of re-running the
+  * parse, the dedup windows and the anti-join chains once per
+  * consumer.
   */
 object Load {
 
@@ -138,7 +137,9 @@ object Load {
     * commit the song table as a rewrite). `docs` is the batch as
     * loaded. `retentionFired` says the X5 cascade deleted rows, so
     * `db` is a rewrite of the loaded state, not an append to it.
-    * Every frame reads [[loadBatch]]'s checkpoints. */
+    * Every frame plans as a `LocalRelation` over rows [[loadBatch]]
+    * holds on the driver ([[Held]]): reading one runs no load stage
+    * again, and it stays readable whatever scope the caller closes. */
   final case class LoadResult(
       db: MusicDb,
       insertedArtists: DataFrame,
@@ -153,24 +154,22 @@ object Load {
     * `etl_pipeline.py:1003-1022`): the reference inserts dims first,
     * then bridge + fact. Each upsert here anti-joins only its own
     * table and the batch, never another upsert's result, so the four
-    * run concurrently as one [[graft.operators.Wave]] with the S10 URL
-    * probe; the FK order is kept where it matters, in the committed
-    * state, which the manifest publishes for all four tables at once.
-    * The S10 fill, the retention and its cascade follow in order.
+    * run concurrently as one [[graft.operators.Wave]]; the FK order is
+    * kept where it matters, in the committed state, which the manifest
+    * publishes for all four tables at once. The S10 fill, the
+    * retention and its cascade follow in order.
     *
-    * Each stage executes exactly once, here: `docs` at entry, every
-    * upsert's RETURNING set (the new state is `existing ∪ inserted`),
-    * the S10 fill (one checkpoint feeds both `updatedSongs` and the
-    * new song state) and the retention cascade's key sets
-    * ([[Maintenance.retention]]) are
-    * [[graft.operators.CheckpointBlocks.local]] checkpoints. A batch
-    * that carries no apple_music_url skips the fill, and a day with no
-    * aged ranking skips the cascade. So every frame of the result is a
-    * shallow plan over those checkpoints and the `db` scans, however
-    * many times it is read. The checkpoints belong to the caller's
-    * innermost open scope (unscoped, Spark's ContextCleaner reclaims
-    * them once the result is unreachable): the result stays readable
-    * until that scope closes.
+    * Each stage executes exactly once, here, and is held on the driver
+    * ([[Held]]): the four tables of `db` and `docs`, read as one wave
+    * at entry; every upsert's RETURNING set (the new state
+    * `existing ∪ inserted` is built from held rows, with no job); and
+    * the S10 fill (one held frame feeds both `updatedSongs` and the new
+    * song state). The URL probe reads the held batch, and the
+    * retention cascade ([[Maintenance.retention]]) filters the held
+    * tables by driver-side key lists. A batch that carries no
+    * apple_music_url skips the fill, and a day with no aged ranking
+    * skips the cascade. So every frame of the result plans as a
+    * `LocalRelation`, however many times it is read.
     *
     * @param docs normalized song docs with (source, position) carried
     *             explicitly from ingestion (see [[Normalize]]).
@@ -179,49 +178,58 @@ object Load {
     *              reproducible backfills).
     */
   def loadBatch(db: MusicDb, docs: DataFrame, today: java.sql.Date): LoadResult = {
-    val batch = local(docs)
+    val spark = docs.sparkSession
+    // the waves' members touch these objects; initialise them here
+    (Held, Normalize, graft.io.MusicCsv): Unit
+    // the pinned tables and the docs, each executed once
+    val Seq(artist0, song0, map0, rank0, batch) = Wave.run(spark)(
+      Seq(db.artist, db.song, db.artistSongMap, db.ranking, docs).map(df => () => Held(df)))
     val pos = Seq(col("source").asc, col("position").asc)
 
-    // the four upserts and the S10 probe each read only their own
-    // table and the batch: one wave runs them, then the fill, the
-    // retention and its cascade follow in order
-    lazy val artist = upsertOnce(db.artist, Normalize.artists(batch),
-      Seq(Seq("artist_id")), Seq(Normalize.artistPriority))
+    // the four upserts each read only their own table and the batch:
+    // one wave runs them, then the fill, the retention and its
+    // cascade follow in order. Both sides are small and held, so each
+    // upsert runs as one task over one partition of each: the dedup
+    // windows and aggregates need no exchange, and the shuffle-hash
+    // hint keeps the planner from broadcasting the table side, which
+    // costs a job per constraint
+    val batch1 = batch.coalesce(1)
+    def upsertHeld(existing: DataFrame, rows: DataFrame, constraints: Seq[Seq[String]],
+        priority: Seq[Column]): () => (DataFrame, DataFrame) = { () =>
+      val inserted = upsertOnce(existing.coalesce(1).hint("shuffle_hash"), rows,
+        constraints, priority)
+      (inserted, Held.union(existing, inserted))
+    }
     // keep (source, position) through the within-batch dedup; upsert
     // projects to the table schema only after ordering by them
-    val songs = batch.select(
+    val songs = batch1.select(
       (db.song.columns.map(col) ++ Seq(col("source"), col("position"))).toSeq: _*)
-    lazy val song = upsertOnce(
-      db.song, songs,
-      Seq(Seq("isrc"), Seq("spotify_url"), Seq("apple_music_url")),
-      pos)
-    lazy val map = upsertOnce(db.artistSongMap, Normalize.artistSongMaps(batch),
-      Seq(Seq("artist_id", "isrc")), Seq(col("artist_id").asc))
-    // rank is 1:1 with position within each source, so (source, rank)
-    // reproduces the reference's insert order without re-carrying the
-    // ingestion columns through the W2 window
-    lazy val rank = upsertOnce(
-      db.ranking, Normalize.rankings(batch, today),
-      Seq(Seq("isrc", "ranking_date", "ranking_source"),
-        Seq("ranking_date", "rank", "ranking_source")),
-      Seq(col("ranking_source").asc, col("rank").asc))
-    val urls = batch.select(col("isrc"), col("apple_music_url"))
-      .where(col("apple_music_url").isNotNull)
-    lazy val noUrls = urls.isEmpty
-    // the wave's members touch these objects; initialise them here
-    (Normalize, graft.io.MusicCsv): Unit
-    Wave.run(batch.sparkSession)(Seq(() => artist, () => song, () => map, () => rank,
-      () => noUrls))
-    val ((insArtist, newArtist), (insSong, newSong0), (insMap, newMap), (insRank, newRank)) =
-      (artist, song, map, rank)
+    val Seq((insArtist, newArtist), (insSong, newSong0), (insMap, newMap), (insRank, newRank)) =
+      Wave.run(spark)(Seq(
+        upsertHeld(artist0, Normalize.artists(batch1),
+          Seq(Seq("artist_id")), Seq(Normalize.artistPriority)),
+        upsertHeld(song0, songs,
+          Seq(Seq("isrc"), Seq("spotify_url"), Seq("apple_music_url")), pos),
+        upsertHeld(map0, Normalize.artistSongMaps(batch1),
+          Seq(Seq("artist_id", "isrc")), Seq(col("artist_id").asc)),
+        // rank is 1:1 with position within each source, so (source,
+        // rank) reproduces the reference's insert order without
+        // re-carrying the ingestion columns through the W2 window
+        upsertHeld(rank0, Normalize.rankings(batch1, today),
+          Seq(Seq("isrc", "ranking_date", "ranking_source"),
+            Seq("ranking_date", "rank", "ranking_source")),
+          Seq(col("ranking_source").asc, col("rank").asc))))
 
     // songs already present keep their row but may gain an
     // apple_music_url they lacked (S10 enrich path); a batch that
-    // carries no url fills nothing
+    // carries no url fills nothing. The probe folds into the held
+    // batch at plan time and runs no job
+    val urls = batch.select(col("isrc"), col("apple_music_url"))
+      .where(col("apple_music_url").isNotNull)
     val (updSong, newSong) =
-      if (noUrls) (newSong0.limit(0), newSong0)
+      if (urls.isEmpty) (newSong0.limit(0), newSong0)
       else returningAndState(
-        local(filled(newSong0, urls, "isrc", "apple_music_url")
+        Held(filled(newSong0, urls, "isrc", "apple_music_url")
           .select((db.song.columns :+ "__hit").map(col).toSeq: _*)),
         db.song.columns)
 
@@ -233,13 +241,10 @@ object Load {
       batch, retentionFired = retained.isDefined)
   }
 
-  /** [[upsert]] executed once: (the checkpointed RETURNING set,
-    * `existing ∪` it). */
+  /** [[upsert]]'s RETURNING set, executed once and held ([[Held]]). */
   private[etl] def upsertOnce(existing: DataFrame, batch: DataFrame,
-      constraints: Seq[Seq[String]], priority: Seq[Column]): (DataFrame, DataFrame) = {
-    val inserted = local(upsert(existing, batch, constraints, priority)._1)
-    (inserted, existing.unionByName(inserted))
-  }
+      constraints: Seq[Seq[String]], priority: Seq[Column]): DataFrame =
+    Held(upsert(existing, batch, constraints, priority)._1)
 
   /** S11 CSV append sink, in the reference's CSV conventions
     * (`etl_pipeline.py:732-742`, SURVEY.md §3.3): every non-null value

@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.Music.MusicDb
-import graft.operators.CheckpointBlocks
 
 /** The reference's trigger graph as explicit batch stages (SURVEY.md
   * §2.10 X3-X5): triggers have no Spark analog, so per-row trigger
@@ -50,34 +49,41 @@ object Maintenance {
     cascade(db, deleted, db.ranking.exceptAll(deleted))
 
   /** The trigger cascade of a ranking delete, given the delete set and
-    * the rankings it leaves. The two gone-key sets are executed once
-    * each ([[CheckpointBlocks.local]]), so every returned table is a
-    * shallow anti-join against a checkpoint. */
+    * the rankings it leaves. Four key lists are collected to the
+    * driver: the deleted and the still-ranked songs, then the artists
+    * the song deletes touched and the artists still mapped. The gone
+    * keys are their set differences, and each returned table is its
+    * input filtered by a gone-key list. Over the daily load's held
+    * tables ([[Load.loadBatch]]) every collect reads a `LocalRelation`
+    * and every filter folds into one at plan time, so the cascade runs
+    * no Spark job. The lists are as long as the tables' key sets,
+    * which X5 retention bounds (see [[graft.DailyEtl.run]]). */
   private def cascade(db: MusicDb, deleted: DataFrame, ranking: DataFrame): MusicDb = {
-    val deletedKeys = deleted.select("isrc").distinct()
-
     // X4: touched songs with no remaining ranking rows
-    val songsGone = CheckpointBlocks.local(deletedKeys
-      .join(ranking.select("isrc").distinct(), Seq("isrc"), "left_anti"))
+    val songsGone = keys(deleted, "isrc") -- keys(ranking, "isrc")
     val song = without(db.song, songsGone, "isrc")
 
     // FK ON DELETE CASCADE: bridge rows of deleted songs
-    val mapsGone = db.artistSongMap.join(songsGone, Seq("isrc"), "left_semi")
+    val touched = keys(db.artistSongMap.where(col("isrc").isin(songsGone.toSeq: _*)), "artist_id")
     val artistSongMap = without(db.artistSongMap, songsGone, "isrc")
 
     // X3: touched artists with no remaining bridge rows
-    val artistsGone = CheckpointBlocks.local(mapsGone.select("artist_id").distinct()
-      .join(artistSongMap.select("artist_id").distinct(), Seq("artist_id"), "left_anti"))
+    val artistsGone = touched -- keys(artistSongMap, "artist_id")
     val artist = without(db.artist, artistsGone, "artist_id")
 
     MusicDb(artist, song, artistSongMap, ranking)
   }
 
-  /** `table`'s rows whose `key` is not in `gone`, in `table`'s column
-    * order (a USING anti-join moves the key first, and a rewrite
-    * commits whatever order it is given). */
-  private def without(table: DataFrame, gone: DataFrame, key: String): DataFrame =
-    table.join(gone, Seq(key), "left_anti").select(table.columns.map(col).toSeq: _*)
+  /** The distinct non-NULL values of `df`'s `key`, on the driver. A
+    * NULL key matches no row of the cascade (SQL equality), so
+    * leaving it out changes no result. */
+  private def keys(df: DataFrame, key: String): Set[Any] =
+    df.select(key).collect().iterator.map(_.get(0)).filter(_ != null).toSet
+
+  /** `table`'s rows whose `key` is not in `gone`. A row with a NULL
+    * key stays, as a `left_anti` join against the gone keys keeps it. */
+  private def without(table: DataFrame, gone: Set[Any], key: String): DataFrame =
+    table.where(col(key).isNull || !col(key).isin(gone.toSeq: _*))
 
   /** Constraint audit (SURVEY.md §1.4): the DDL's PK/UNIQUE/CHECK
     * rules as a validation report — violation counts per rule, for

@@ -125,7 +125,7 @@ trait TableFormat {
     // over the full table runs three times (empty guard, the commit's
     // recompute of existing∪inserted, the caller's action on the
     // returned frame)
-    val (inserted, _) = Load.upsertOnce(existing, batch, constraints, priority)
+    val inserted = Load.upsertOnce(existing, batch, constraints, priority)
     if (inserted.isEmpty) inserted
     // the merged state IS existing ∪ inserted — commit it as an
     // APPEND of the survivors onto the version the anti-joins saw,
@@ -147,7 +147,7 @@ trait TableFormat {
       Load.updateColumn(readVersion(table, base), updates, key, valueCol)
     // same one-execution discipline as mergeInsert: the fill join
     // otherwise runs for the guard, the commit, and the caller's read
-    val returning = graft.operators.CheckpointBlocks.local(returning0)
+    val returning = Held(returning0)
     if (returning.isEmpty) returning
     else { tryCommit(table, newState, base); returning }
   }

@@ -132,6 +132,33 @@ class DailyEtlSpec extends SparkSpec {
     }
   }
 
+  test("the day's result does not depend on the caller's checkpoint scope: every frame reads after it closes") {
+    val dir = Files.createTempDirectory("dailyetl_scope")
+    val fetcher = new Sources.FileFetcher(Map.empty)
+    val ids1 = (1 to 10).map(i => s"t$i")
+    def cfg(n: Int, date: LocalDate, idsN: Seq[String]) = DailyEtl.Config(
+      s"$dir/store", date,
+      write(java.nio.file.Paths.get(s"$dir/p$n.html"), playlistHtml(idsN)),
+      write(java.nio.file.Paths.get(s"$dir/t$n.json"), tracksJson(idsN)),
+      s"$dir/README.md", Some(s"$dir/csv"))
+    DailyEtl.run(spark, fetcher, cfg(1, LocalDate.of(2025, 1, 1), ids1))
+    // 13 months on, so the scoped day runs the retention cascade too:
+    // t1 loses its only ranking, its bridge rows and its own artist
+    val res = graft.operators.CheckpointBlocks.scoped(
+      DailyEtl.run(spark, fetcher, cfg(2, LocalDate.of(2026, 2, 1), ids1.drop(1) :+ "t99")))
+    assert(res.retentionFired)
+    val rows = Seq(
+      "db.artist" -> res.db.artist, "db.song" -> res.db.song,
+      "db.artistSongMap" -> res.db.artistSongMap, "db.ranking" -> res.db.ranking,
+      "insertedArtists" -> res.insertedArtists, "insertedSongs" -> res.insertedSongs,
+      "updatedSongs" -> res.updatedSongs, "insertedMaps" -> res.insertedMaps,
+      "insertedRankings" -> res.insertedRankings, "docs" -> res.docs)
+      .map { case (n, df) => n -> df.collect().length }.toMap
+    assert(rows == Map("db.artist" -> 11, "db.song" -> 10, "db.artistSongMap" -> 20,
+      "db.ranking" -> 10, "insertedArtists" -> 1, "insertedSongs" -> 1, "updatedSongs" -> 0,
+      "insertedMaps" -> 2, "insertedRankings" -> 10, "docs" -> 10), rows)
+  }
+
   test("a short chart aborts the run before anything is loaded") {
     val dir = Files.createTempDirectory("dailyetl_short")
     val store = s"$dir/store"

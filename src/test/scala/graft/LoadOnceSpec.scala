@@ -3,7 +3,7 @@ package graft
 import java.sql.Date
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, Window}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, LocalRelation, Window}
 import org.apache.spark.sql.functions._
 
 import graft.etl.Load
@@ -11,8 +11,9 @@ import graft.model.Music.{Artist, MusicDb}
 
 /** [[Load.loadBatch]] executes each load stage once: a counting UDF in
   * the docs' plan runs once per doc row however many of the result's
-  * frames are executed, and the new table states do not carry the
-  * docs' explode or dedup windows into what a commit executes. */
+  * frames are executed, the new table states do not carry the docs'
+  * explode or dedup windows into what a commit executes, and every
+  * frame of the result is held on the driver. */
 class LoadOnceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,6 +73,25 @@ class LoadOnceSpec extends SparkSpec {
         val plan = df.queryExecution.optimizedPlan
         val inlined = plan.collect { case w: Window => w; case g: Generate => g }
         assert(inlined.isEmpty, s"$n re-runs the docs' explode or dedup:\n$plan")
+    }
+  }
+
+  test("every frame of loadBatch's result plans over driver-held LocalRelations: no RDD or file scan") {
+    // the pinned tables as a store holds them: parquet scans
+    val dir = java.nio.file.Files.createTempDirectory("load_once_held").toString
+    def stored(name: String, df: DataFrame): DataFrame = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    val db = MusicDb(stored("artist", agedDb.artist), stored("song", agedDb.song),
+      stored("artist_song_map", agedDb.artistSongMap), stored("ranking", agedDb.ranking))
+    val res = Load.loadBatch(db, docs(_ => lit(true)), d("2026-02-01"))
+    assert(res.retentionFired)
+    (frames(res) :+ ("docs" -> res.docs)).foreach { case (n, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val leaves = plan.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[LocalRelation]),
+        s"$n reads something other than held rows:\n$plan")
     }
   }
 }

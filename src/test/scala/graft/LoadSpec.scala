@@ -227,6 +227,21 @@ class LoadSpec extends SparkSpec {
     assert(out.song.select("isrc").as[String].collect().toSeq == Seq("I9"))
   }
 
+  test("GC cascade keeps NULL-keyed rows, as a left_anti join against the gone keys does") {
+    val db = MusicDb(
+      Seq(("A1", "Ann"), (null, "Nobody")).toDF("artist_id", "artist_name"),
+      Seq(("I1", "A", 1, false, "su1", Option.empty[String]),
+        (null, "Keyless", 2, false, "su2", Option.empty[String])).toDF(emptySong.columns.toSeq: _*),
+      Seq(("A1", "I1"), (null, "I1"), ("A1", null)).toDF("artist_id", "isrc"),
+      Seq(("I1", d("2026-01-01"), 1, "Spotify")).toDF("isrc", "ranking_date", "rank", "ranking_source"))
+    val out = Maintenance.deleteRankings(db, db.ranking)
+    // I1 goes with both of its bridge rows; A1 is still mapped (to a
+    // NULL isrc), and no NULL key matches a gone key
+    assert(out.song.select("song_name").as[String].collect().toSeq == Seq("Keyless"))
+    assertSameRows(out.artistSongMap, Seq(Seq("A1", null)))
+    assert(out.artist.select("artist_name").as[String].collect().toSet == Set("Ann", "Nobody"))
+  }
+
   /** The `part-*` files of a CSV sink directory, concatenated in name order. */
   private def sinkText(dir: String): String =
     Option(new java.io.File(dir).listFiles()).toSeq.flatten
